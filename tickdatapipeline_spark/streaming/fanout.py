@@ -35,6 +35,7 @@ holds in-process (TripleSplitSystem.jl:230-258).
 
 from __future__ import annotations
 
+import logging
 import threading
 from collections import deque
 from collections.abc import Callable
@@ -43,6 +44,8 @@ from enum import Enum
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 class ConsumerType(Enum):
@@ -140,10 +143,20 @@ class TripleSplitManager:
 
     def broadcast_batch(self, df: DataFrame, batch_id: int = 0) -> tuple[int, int, int]:
         """Deliver one batch to every consumer; returns
-        (n_consumers, n_successful, total_rows_dropped)."""
+        (n_consumers, n_successful, total_rows_dropped).
+
+        PRIORITY consumers are served first, and one's exception
+        propagates: its delivery is guaranteed, so the caller must not
+        commit the batch and the stream replays it. Because no other
+        consumer has seen the batch yet, the replay reaches each of them
+        once. The failed attempt counts as a broadcast that did not
+        succeed. A MONITORING/ANALYTICS failure is logged and counted as
+        unsuccessful; it never takes down the pipeline."""
         with self._lock:  # snapshot under lock, deliver outside
-            consumers = list(self._consumers.values())
+            consumers = sorted(self._consumers.values(),
+                               key=lambda c: c.ctype is not ConsumerType.PRIORITY)
         n_rows = df.count()
+        self.total_broadcasts += 1
         successful = 0
         dropped_total = 0
         for c in consumers:
@@ -152,9 +165,10 @@ class TripleSplitManager:
                 c.stats.batches += 1
                 successful += 1
             except Exception:
-                # a failing consumer must not take down the pipeline
-                pass
-        self.total_broadcasts += 1
+                if c.ctype is ConsumerType.PRIORITY:
+                    raise
+                log.warning("consumer %s failed on batch %d", c.consumer_id, batch_id,
+                            exc_info=True)
         if successful == len(consumers):
             self.successful_broadcasts += 1
         return len(consumers), successful, dropped_total

@@ -8,7 +8,9 @@ on restart the snapshot is restored and any batch the file source
 REPLAYS (its id <= the snapshot's) is skipped, which upgrades
 foreachBatch's at-least-once delivery to exactly-once state evolution.
 
-The snapshot is O(streams) scalars — the same cardinality the reference
+State is one map per stage keyed by stream (``states``/``bar_states``);
+a single stream sits under the constant key state.ONE_KEY. The snapshot
+is O(streams) scalars — the same cardinality the reference
 keeps in memory per stream (one TickHotLoopState + BarProcessorState),
 so at thousands of streams this is a few hundred KB of JSON.
 """
@@ -47,14 +49,12 @@ def _decode_bars(d: dict):
     return BarSeed(**d)
 
 
-def save_snapshot(path: str, *, batch_id: int, single, single_bars,
-                  states: dict, bar_states: dict, ticks_processed: int) -> None:
+def save_snapshot(path: str, *, batch_id: int, states: dict, bar_states: dict,
+                  ticks_processed: int) -> None:
     """Atomic post-batch snapshot (write temp, rename over)."""
     doc = {
         "batch_id": batch_id,
         "ticks_processed": ticks_processed,
-        "single": _encode_state(single),
-        "single_bars": _encode_bars(single_bars),
         "states": {k: _encode_state(v) for k, v in states.items()},
         "bar_states": {k: _encode_bars(v) for k, v in bar_states.items()},
     }
@@ -65,17 +65,21 @@ def save_snapshot(path: str, *, batch_id: int, single, single_bars,
 
 
 def load_snapshot(path: str):
-    """Returns (batch_id, single, single_bars, states, bar_states,
-    ticks_processed) or None if no snapshot exists."""
+    """Returns (batch_id, states, bar_states, ticks_processed) or None if
+    no snapshot exists.
+
+    Snapshots from before the single stream became the one-key case kept
+    it in separate ``single``/``single_bars`` fields; a stream that had
+    progressed there is folded into the constant key, so it resumes."""
+    from tickdatapipeline_spark.streaming.state import ONE_KEY
+
     if not os.path.exists(path):
         return None
     with open(path) as f:
         doc = json.load(f)
-    return (
-        doc["batch_id"],
-        _decode_state(doc["single"]),
-        _decode_bars(doc["single_bars"]),
-        {k: _decode_state(v) for k, v in doc["states"].items()},
-        {k: _decode_bars(v) for k, v in doc["bar_states"].items()},
-        doc["ticks_processed"],
-    )
+    states = {k: _decode_state(v) for k, v in doc["states"].items()}
+    bar_states = {k: _decode_bars(v) for k, v in doc["bar_states"].items()}
+    if "single" in doc and doc["single"]["tick0"] > 0:
+        states[ONE_KEY] = _decode_state(doc["single"])
+        bar_states[ONE_KEY] = _decode_bars(doc["single_bars"])
+    return doc["batch_id"], states, bar_states, doc["ticks_processed"]

@@ -11,28 +11,39 @@ Rate limiting is `maxFilesPerTrigger` instead of a busy-wait nanosleep —
 the idiomatic Spark knob for the same goal (SURVEY.md §2.2 P10).
 
 Ordering: Spark's file source admits files in MODIFICATION-TIME order
-across micro-batches; within a batch this runner processes them in
-lexicographic name order, and each file is re-read through
-sources.tickfile.read_tick_file, which defines line order. The stream
-contract is therefore: session files arrive (mtime) in stream order and
-are named monotonically — which is how session/day capture files are
-produced. A count-ordered stream cannot admit late data — there is no
-watermark by design, matching the reference's strictly-ordered Channel
-(SURVEY §2.9).
+across micro-batches. Within a batch each file is re-read through
+sources.tickfile.read_tick_file, which defines line order, and tagged
+with its stream key; per stream, the batch is ordered by file name, then
+line — one union, one seeded pass, however many files it holds. The
+stream contract is therefore: a stream's files arrive (mtime) in stream
+order and are named monotonically — which is how session/day capture
+files are produced. A count-ordered stream cannot admit late data — there
+is no watermark by design, matching the reference's strictly-ordered
+Channel (SURVEY §2.9).
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tickdatapipeline_spark.config import SignalProcessingConfig
+from tickdatapipeline_spark.operators.bars import BarSeed, enrich_ticks_with_bars
 from tickdatapipeline_spark.sources.tickfile import read_tick_file
 from tickdatapipeline_spark.streaming.fanout import TripleSplitManager
 from tickdatapipeline_spark.streaming.metrics import PipelineMetrics
-from tickdatapipeline_spark.streaming.state import OUT_COLS, StreamState, advance
+from tickdatapipeline_spark.streaming.persistence import load_snapshot, save_snapshot
+from tickdatapipeline_spark.streaming.state import (
+    KEY,
+    ONE_KEY,
+    OUT_COLS,
+    StreamState,
+    advance_bars_streams,
+    advance_streams,
+)
 
 
 class StreamingTickPipeline:
@@ -56,13 +67,18 @@ class StreamingTickPipeline:
     ) -> None:
         """``stream_key`` maps a file path to a logical stream id; files
         of the same stream continue each other's state, different streams
-        are independent (e.g. per-symbol or per-day files). None = the
-        reference's model: every file continues ONE stream.
+        are independent (e.g. per-symbol or per-day files), and output
+        frames carry the key as a ``stream`` column. None = the
+        reference's model: every file continues ONE stream — the one-key
+        case of the same path, under the constant key ONE_KEY, with no
+        key column in the output frames.
 
         ``state_path`` makes continuation state durable: a post-batch
         JSON snapshot (streaming/persistence.py) restored on restart;
         replayed batches (id <= snapshot's) are skipped, so state
         evolves exactly once even though foreachBatch is at-least-once.
+        A PRIORITY consumer failure fails the batch before anything is
+        committed, so the restarted stream replays it in full.
 
         ``enrich`` broadcasts B7-enriched ticks (bar columns on each
         bar-completing tick, nulls elsewhere — the managed live loop's
@@ -70,8 +86,6 @@ class StreamingTickPipeline:
         /root/reference/src/PipelineOrchestrator.jl:155-156); requires
         an enabled ``bar_cfg``. Exact across batch splits because a
         bar's completing tick is always in the bar's completing batch."""
-        from tickdatapipeline_spark.operators.bars import BarSeed
-
         self.spark = spark
         self.input_dir = input_dir
         self.cfg = cfg
@@ -86,160 +100,84 @@ class StreamingTickPipeline:
             raise ValueError("enrich=True requires an enabled bar_cfg")
         self.enrich = enrich
         self.state_path = state_path
-        self._single = StreamState()
-        self._single_bars = BarSeed()
         self.states: dict[str, StreamState] = {}
         self.bar_states: dict[str, BarSeed] = {}
         self.ticks_processed = 0
         self._last_batch_id = -1
         if state_path is not None:
-            from tickdatapipeline_spark.streaming.persistence import load_snapshot
-
             snap = load_snapshot(state_path)
             if snap is not None:
-                (self._last_batch_id, self._single, self._single_bars,
-                 self.states, self.bar_states, self.ticks_processed) = snap
+                (self._last_batch_id, self.states, self.bar_states,
+                 self.ticks_processed) = snap
         self.metrics = PipelineMetrics()  # O2 accumulator, one obs/batch
         self._query = None
 
-    def _commit_state(self, batch_id: int) -> None:
-        self._last_batch_id = batch_id
-        if self.state_path is not None:
-            from tickdatapipeline_spark.streaming.persistence import save_snapshot
+    def _read_batch(self, batch_df: DataFrame) -> DataFrame | None:
+        """The batch's files as one keyed ticks_raw frame (None if the
+        batch holds no file). Each file is tagged with its stream key, and
+        its line_no is offset by its rank among the batch's files of that
+        stream (in name order), so line_no orders each stream by (file
+        name, line)."""
+        files = batch_df.select(F.input_file_name().alias("f")).distinct().collect()
+        raw, rank = None, {}
+        for path in sorted(r["f"] for r in files):
+            key = self.stream_key(path) if self.stream_key else ONE_KEY
+            rank[key] = rank.get(key, -1) + 1
+            part = read_tick_file(self.spark, path).withColumns({
+                KEY: F.lit(key), "line_no": F.col("line_no") + F.lit(rank[key] << 32),
+            })
+            raw = part if raw is None else raw.unionByName(part)
+        return raw
 
-            save_snapshot(
-                self.state_path, batch_id=batch_id, single=self._single,
-                single_bars=self._single_bars, states=self.states,
-                bar_states=self.bar_states, ticks_processed=self.ticks_processed,
-            )
-
-    # -- one micro-batch: resolve files -> ordered read -> seeded ops -----
+    # -- one micro-batch: keyed read -> seeded ops -> one broadcast -------
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import time
-
-        from tickdatapipeline_spark.streaming.state import advance_bars
-
-        from tickdatapipeline_spark.operators.bars import BarSeed
-
         if batch_id <= self._last_batch_id:
             return  # replayed batch: state already reflects it
         batch_t0 = time.perf_counter()
-        signal_us = broadcast_us = broadcasts = 0
+        raw = self._read_batch(batch_df)
+        states, bar_states = self.states, self.bar_states
+        signal_us = broadcast_us = broadcasts = errors = 0
+        processed = bars = None
+        try:
+            if raw is not None:
+                t_sig = time.perf_counter()
+                processed, states = advance_streams(raw, self.cfg, states, KEY)
+                signal_us = int((time.perf_counter() - t_sig) * 1e6)
+                out = processed.select(KEY, *OUT_COLS)
+                if self.bar_cfg is not None and self.bar_cfg.enabled:
+                    bars, bar_states = advance_bars_streams(out, self.bar_cfg, bar_states, KEY)
+                if self.enrich:
+                    out = enrich_ticks_with_bars(out, bars, stream_id=KEY)
+                keyless = self.stream_key is None
+                t_bc = time.perf_counter()
+                n, ok, _ = self.manager.broadcast_batch(
+                    out.drop(KEY) if keyless else out, batch_id
+                )
+                broadcast_us = int((time.perf_counter() - t_bc) * 1e6)
+                broadcasts, errors = 1, n - ok
+                if bars is not None and self.bar_sink is not None:
+                    self.bar_sink(bars.drop(KEY) if keyless else bars, batch_id)
+        finally:
+            for df in (bars, processed):
+                if df is not None:
+                    df.unpersist()
         ticks_before = self.ticks_processed
-        files = sorted(
-            r["f"] for r in batch_df.select(F.input_file_name().alias("f")).distinct().collect()
-        )
-        if self.stream_key is not None and len(files) > 1:
-            by_stream: dict[str, list[str]] = {}
-            for path in files:
-                by_stream.setdefault(self.stream_key(path), []).append(path)
-            if len(by_stream) > 1 and all(len(v) == 1 for v in by_stream.values()):
-                # scale path: thousands of streams, one file each -> a
-                # CONSTANT number of Spark jobs for the whole batch
-                self._process_batch_multistream(
-                    {k: v[0] for k, v in by_stream.items()}, batch_id, batch_t0
-                )
-                return
-        for path in files:
-            key = self.stream_key(path) if self.stream_key else None
-            state = self._single if key is None else self.states.get(key, StreamState())
-            bar_state = (
-                self._single_bars if key is None else self.bar_states.get(key, BarSeed())
-            )
-            raw = read_tick_file(self.spark, path)
-            t_sig = time.perf_counter()
-            processed, state = advance(raw, self.cfg, state)
-            signal_us += int((time.perf_counter() - t_sig) * 1e6)
-            out = processed.select(*OUT_COLS)
-            bars = None
-            if self.bar_cfg is not None and self.bar_cfg.enabled:
-                bars, bar_state = advance_bars(
-                    processed.select(*OUT_COLS), self.bar_cfg, bar_state
-                )
-            if self.enrich:
-                from tickdatapipeline_spark.operators.bars import enrich_ticks_with_bars
-
-                out = enrich_ticks_with_bars(out, bars)
-            if key is not None:
-                out = out.withColumn("stream", F.lit(key))
-            t_bc = time.perf_counter()
-            self.manager.broadcast_batch(out, batch_id)
-            broadcast_us += int((time.perf_counter() - t_bc) * 1e6)
-            broadcasts += 1
-            if bars is not None:
-                if self.bar_sink is not None:
-                    out_bars = bars.withColumn("stream", F.lit(key)) if key is not None else bars
-                    self.bar_sink(out_bars, batch_id)
-                bars.unpersist()
-            if key is None:
-                self._single, self._single_bars = state, bar_state
-            else:
-                self.states[key], self.bar_states[key] = state, bar_state
-            processed.unpersist()
-        self.ticks_processed = (
-            self._single.tick0 if self.stream_key is None
-            else sum(s.tick0 for s in self.states.values())
-        )
+        self.states, self.bar_states = states, bar_states
+        self.ticks_processed = sum(s.tick0 for s in states.values())
         self.metrics.record_batch(
             ticks=self.ticks_processed - ticks_before,
             total_us=int((time.perf_counter() - batch_t0) * 1e6),
             signal_us=signal_us,
             broadcast_us=broadcast_us,
             broadcasts=broadcasts,
+            errors=errors,
         )
-        self._commit_state(batch_id)
-        if self.on_batch is not None:
-            self.on_batch(batch_id, self.ticks_processed)
-
-    def _process_batch_multistream(
-        self, file_of: dict[str, str], batch_id: int, batch_t0: float
-    ) -> None:
-        """One-file-per-stream batch: union the tagged reads and run the
-        whole thing through advance_streams / advance_bars_streams — per
-        -stream seeds travel as broadcast-joined tables, state extraction
-        is O(streams) collected rows (streaming/state.py). Batches where
-        one stream spans several files keep the ordered per-file loop."""
-        import time
-
-        from tickdatapipeline_spark.streaming.state import advance_streams, advance_bars_streams
-
-        raw = None
-        for key, path in sorted(file_of.items()):
-            part = read_tick_file(self.spark, path).withColumn("stream", F.lit(key))
-            raw = part if raw is None else raw.unionByName(part)
-
-        t_sig = time.perf_counter()
-        processed, self.states = advance_streams(raw, self.cfg, self.states, "stream")
-        signal_us = int((time.perf_counter() - t_sig) * 1e6)
-        out = processed.select("stream", *OUT_COLS)
-        bars = None
-        if self.bar_cfg is not None and self.bar_cfg.enabled:
-            bars, self.bar_states = advance_bars_streams(
-                out, self.bar_cfg, self.bar_states, "stream"
+        self._last_batch_id = batch_id
+        if self.state_path is not None:
+            save_snapshot(
+                self.state_path, batch_id=batch_id, states=self.states,
+                bar_states=self.bar_states, ticks_processed=self.ticks_processed,
             )
-        bc_out = out
-        if self.enrich:
-            from tickdatapipeline_spark.operators.bars import enrich_ticks_with_bars
-
-            bc_out = enrich_ticks_with_bars(out, bars, stream_id="stream")
-        t_bc = time.perf_counter()
-        self.manager.broadcast_batch(bc_out, batch_id)
-        broadcast_us = int((time.perf_counter() - t_bc) * 1e6)
-        if bars is not None:
-            if self.bar_sink is not None:
-                self.bar_sink(bars, batch_id)
-            bars.unpersist()
-        processed.unpersist()
-        ticks_before = self.ticks_processed
-        self.ticks_processed = sum(s.tick0 for s in self.states.values())
-        self.metrics.record_batch(
-            ticks=self.ticks_processed - ticks_before,
-            total_us=int((time.perf_counter() - batch_t0) * 1e6),
-            signal_us=signal_us,
-            broadcast_us=broadcast_us,
-            broadcasts=1,
-        )
-        self._commit_state(batch_id)
         if self.on_batch is not None:
             self.on_batch(batch_id, self.ticks_processed)
 
