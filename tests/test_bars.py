@@ -108,10 +108,7 @@ def test_enrichment_nulls_except_completing_tick(spark):
 @pytest.mark.heavy
 def test_chunked_bars_equal_windowed(spark, method, tpb):
     """Two-pass chunked bar_aggregate must be bit-identical to the
-    windowed plan across many chunk boundaries, both averaging methods,
-    with and without a continuation seed."""
-    from tickdatapipeline_spark.operators.bars import BarSeed
-
+    windowed plan across many chunk boundaries, both averaging methods."""
     prices = [41970 + (i * 7) % 23 - 11 for i in range(120)]
     bp = BarProcessingConfig(enabled=True, ticks_per_bar=tpb, bar_method=method,
                              normalization_window_bars=3)
@@ -121,19 +118,6 @@ def test_chunked_bars_equal_windowed(spark, method, tpb):
     chk = bar_aggregate(ticks, bp, chunk_size=tpb * 2).orderBy("bar_idx")
     chk = chk.select(list(win.columns)).toPandas()
     assert win.equals(chk)
-
-    seed = BarSeed(partial_cnt0=2, partial_open0=41960, partial_high0=41980,
-                   partial_low0=41950, bars_done0=7, prev_avg0=41965,
-                   sum_high0=293860, sum_low0=293630, norm0=12.5,
-                   tail_prices0=tuple((i - 20, 41900 + i) for i in range(8)))
-    # seeded continuation: batch ticks continue the numbering
-    from pyspark.sql import functions as F
-
-    cont = ticks.withColumn("tick_idx", F.col("tick_idx") + 7 * tpb + 2)
-    win_s = bar_aggregate(cont, bp, seed=seed).orderBy("bar_idx").toPandas()
-    chk_s = bar_aggregate(cont, bp, seed=seed, chunk_size=tpb * 2).orderBy("bar_idx")
-    chk_s = chk_s.select(list(win_s.columns)).toPandas()
-    assert win_s.equals(chk_s)
 
 
 @pytest.mark.heavy
@@ -195,36 +179,6 @@ def test_multistream_chunked_bars_equal_windowed(spark, method, tpb):
     a = win.orderBy("stream", "bar_idx").toPandas()
     b = chk.select(*win.columns).orderBy("stream", "bar_idx").toPandas()
     assert len(a) >= 10 and a.equals(b)
-
-
-@pytest.mark.heavy
-def test_fir_single_seed_with_stream_column(spark):
-    """A single BarSeed carrying a FIR tail + a stream column must not
-    crash (the tail previously lacked the stream column and broke
-    unionByName) and must equal the per-stream dict-seed run with the
-    same seed for every stream — the single seed applies uniformly."""
-    from pyspark.sql import functions as F
-
-    from tickdatapipeline_spark.operators.bars import BarSeed
-
-    prices = [41970 + (i * 5) % 17 - 8 for i in range(24)]
-    bp = BarProcessingConfig(enabled=True, ticks_per_bar=4, bar_method="FIR",
-                             normalization_window_bars=2)
-    base = processed(spark, prices).withColumn("tick_idx", F.col("tick_idx") + 8)
-    two = base.withColumn("stream", F.lit("A")).unionByName(
-        base.withColumn("stream", F.lit("B")))
-    seed = BarSeed(bars_done0=2, tail_prices0=tuple((i + 1, 41900 + i) for i in range(8)))
-
-    single = bar_aggregate(two, bp, stream_id="stream", seed=seed)
-    single_rows = sorted((r.stream, r.bar_idx, r.bar_average_raw)
-                         for r in single.collect())
-    assert single_rows  # produced bars for both streams without crashing
-
-    per_stream = bar_aggregate(two, bp, stream_id="stream",
-                               seed={"A": seed, "B": seed})
-    dict_rows = sorted((r.stream, r.bar_idx, r.bar_average_raw)
-                       for r in per_stream.collect())
-    assert single_rows == dict_rows
 
 
 def test_vwap_bars_golden(spark):

@@ -17,7 +17,7 @@ from tests.conftest import make_ticks_raw
 from tickdatapipeline_spark import constants as C
 from tickdatapipeline_spark.config import SignalProcessingConfig
 from tickdatapipeline_spark.operators.expansion import expand_volume
-from tickdatapipeline_spark.operators.hotloop import HotLoopSeed, hot_loop
+from tickdatapipeline_spark.operators.hotloop import hot_loop
 
 TS = "20250319 120000 0000000"
 
@@ -244,30 +244,6 @@ def test_chunked_equals_windowed(spark, enc):
     a = win.orderBy("tick_idx").toPandas()
     b = chk.orderBy("tick_idx").select(list(a.columns)).toPandas()
     assert a.equals(b)
-
-
-@pytest.mark.heavy
-def test_chunked_equals_windowed_with_seed(spark):
-    """Micro-batch continuation seeds must flow through the chunked path
-    exactly as through the windowed one."""
-    seed = HotLoopSeed(n_valid0=5, core_seq0=4, sum_bmin0=-3, sum_bmax0=7,
-                       partial_cnt0=2, partial_min0=-2, partial_max0=3,
-                       inv_q16_0=211, cpm_theta0=12345, amc_n0=9,
-                       last_core_ratio0=0.25)
-    prices = [41970, 41972, 99999, 41969, 41973, 41970, 41971, 41975]
-    raw = make_ticks_raw(spark, [(i + 1, TS, p, 2) for i, p in enumerate(prices)])
-    for enc in ("derivative", "cpm", "amc"):
-        cfg = SignalProcessingConfig(encoder_type=enc, tick_derivative_imag_scale=2.0,
-                                     cpm_modulation_index=0.2)
-        win = hot_loop(expand_volume(raw, seed_prev_last=41968, seed_tick0=100),
-                       cfg, keep_internals=True, seed=seed)
-        chk = hot_loop(
-            expand_volume(raw, seed_prev_last=41968, seed_tick0=100, chunk_size=3),
-            cfg, keep_internals=True, seed=seed, chunk_size=3,
-        )
-        a = win.orderBy("tick_idx").toPandas()
-        b = chk.orderBy("tick_idx").select(list(a.columns)).toPandas()
-        assert a.equals(b), enc
 
 
 @pytest.mark.parametrize("enc", ["derivative", "hexad16", "cpm", "amc"])

@@ -35,6 +35,42 @@ def test_multistream_pipeline_has_no_single_partition_windows(spark):
         assert "ASC" not in m.group(1).split(",")[0], f"unpartitioned window: {m.group(0)[:120]}"
 
 
+def exchanges(df) -> list[str]:
+    return [ln for ln in physical(df).splitlines() if "Exchange" in ln]
+
+
+def test_runner_keyed_source_is_one_exchange_per_batch(spark, tmp_path):
+    """The runner parses a micro-batch in the batch's own scan: its keyed
+    ticks_raw plans as many exchanges for three files as for one, and
+    none of them funnels into a single partition."""
+    from tickdatapipeline_spark.config import SignalProcessingConfig
+    from tickdatapipeline_spark.streaming import StreamingTickPipeline, TripleSplitManager
+
+    files = []
+    for i in range(3):
+        files.append(str(tmp_path / f"{i:03d}-sym{i % 2}.txt"))
+        with open(files[-1], "w") as f:
+            f.write(f"20250319 12000{i} 0000000;41969;41971;41970;{i + 1}\n")
+    pipe = StreamingTickPipeline(
+        spark, str(tmp_path), SignalProcessingConfig(), TripleSplitManager(),
+        checkpoint_dir=str(tmp_path / "ckpt"), stream_key=lambda p: p.rsplit("-", 1)[-1])
+    one = exchanges(pipe._read_batch(spark.read.text(files[:1])))
+    three = exchanges(pipe._read_batch(spark.read.text(files)))
+    assert len(one) == len(three) >= 1
+    assert not any("SinglePartition" in ln for ln in one + three)
+
+
+def test_read_tick_file_keeps_one_single_partition_exchange(spark, tmp_path):
+    """read_tick_file, the day_file source, numbers lines in one global
+    order: exactly one exchange, a SinglePartition one."""
+    from tickdatapipeline_spark.sources.tickfile import read_tick_file
+
+    path = tmp_path / "t.txt"
+    path.write_text("20250319 120000 0000000;41969;41971;41970;1\n")
+    ex = exchanges(read_tick_file(spark, str(path)))
+    assert len(ex) == 1 and "SinglePartition" in ex[0]
+
+
 def test_parquet_scan_prunes_columns(spark):
     df = spark.read.parquet(f"{SF}/lineitem.parquet").select("l_orderkey", "l_quantity")
     plan = physical(df)

@@ -59,33 +59,6 @@ def test_read_tick_files_per_stream_numbering(spark, tmp_path):
     assert out.groupBy("stream").count().count() == 2
 
 
-def test_read_tick_file_distributed_numbering(spark, tmp_path):
-    """Split-chunked line numbering must equal the windowed numbering
-    (malformed lines skipped identically) and plan no SinglePartition
-    exchange."""
-    from tickdatapipeline_spark.sources.tickfile import read_tick_file
-
-    p = tmp_path / "ticks.txt"
-    with open(p, "w") as f:
-        price = 41970
-        for i in range(200):
-            price += (i * 3) % 7 - 3
-            if i % 17 == 5:
-                f.write("garbage line\n")        # malformed: skipped
-            if i % 29 == 7:
-                f.write("   \n")                 # blank: skipped
-            f.write(f"20250319 1200{i % 60:02d} 0000000;{price - 1};{price + 1};{price};{1 + i % 3}\n")
-
-    win = read_tick_file(spark, str(p)).orderBy("line_no").collect()
-    dist_df = read_tick_file(spark, str(p), distributed_numbering=True)
-    assert "SinglePartition" not in dist_df._jdf.queryExecution().executedPlan().toString()
-    dist = dist_df.orderBy("line_no").collect()
-    assert len(win) == len(dist) == 200
-    for a, b in zip(win, dist):
-        assert (a.line_no, a.ts_str, a.bid, a.ask, a.last, a.volume) == \
-               (b.line_no, b.ts_str, b.bid, b.ask, b.last, b.volume)
-
-
 def test_events_event_id_contiguity_contract():
     """The chunked multistream source (sources/tickfile.py,
     ticks_from_events_streams with chunk_size) rewrites per-stream

@@ -11,6 +11,7 @@ import os
 import pytest
 
 from tests.conftest import make_ticks_raw
+from tests.test_sources import write_file
 from tests.test_streaming import TS, tick_rows
 from tickdatapipeline_spark.config import BarProcessingConfig, SignalProcessingConfig
 from tickdatapipeline_spark.operators.bars import bar_aggregate, enrich_ticks_with_bars
@@ -28,14 +29,22 @@ BP = BarProcessingConfig(enabled=True, ticks_per_bar=5, bar_method="boxcar",
                          normalization_window_bars=2)
 
 
-def write_files(in_dir, chunks):
+ROWS_B = [(i + 1, TS, 42100 + (i * 5) % 13, 1 + i % 2) for i in range(16)]
+
+
+def sym_key(path):
+    """Stream key of the keyed tests' files: the name after the last '-'."""
+    return path.rsplit("-", 1)[-1]
+
+
+def write_files(in_dir, chunks, junk=False):
     """chunks: [(file name, rows, arrival)]; files sharing an arrival
-    stamp share an mtime, which the file source admits in one batch."""
-    in_dir.mkdir(exist_ok=True)
+    stamp share an mtime, which the file source admits in one batch.
+    ``junk`` ends each file with blank and malformed lines, which every
+    tick-file reader drops."""
+    in_dir.mkdir(parents=True, exist_ok=True)
     for fname, rows, arrival in chunks:
-        with open(in_dir / fname, "w") as f:
-            for _, ts, price, vol in rows:
-                f.write(f"{ts};{price - 1};{price + 1};{price};{vol}\n")
+        write_file(in_dir / fname, [(ts, price, vol) for _, ts, price, vol in rows], junk)
         os.utime(in_dir / fname, (1700000000 + arrival, 1700000000 + arrival))
 
 
@@ -74,12 +83,14 @@ def persistent_rdds(spark) -> set:
 
 
 def test_runner_multifile_microbatch_single_stream(spark, tmp_path):
-    """stream_key=None with two files per micro-batch: each batch is one
-    union ordered by (file name, line), broadcast once, and the output —
-    with no key column — equals the batch plan, bars included."""
+    """stream_key=None with two files per micro-batch, blank and
+    malformed lines included: each batch is one scan ordered by (file
+    name, line), broadcast once, and the output — with no key column —
+    equals the batch plan over the parsed lines, bars included."""
     rows = tick_rows(30)
     write_files(tmp_path / "in", [("t-000.txt", rows[:8], 0), ("t-001.txt", rows[8:13], 0),
-                                  ("t-002.txt", rows[13:22], 1), ("t-003.txt", rows[22:], 1)])
+                                  ("t-002.txt", rows[13:22], 1), ("t-003.txt", rows[22:], 1)],
+                junk=True)
     ticks, bars = [], []
     mgr = TripleSplitManager()
     mgr.subscribe("cap", ConsumerType.PRIORITY, lambda df, bid: ticks.extend(df.collect()))
@@ -100,18 +111,20 @@ def test_runner_multifile_microbatch_single_stream(spark, tmp_path):
 def test_runner_multifile_microbatch_keyed(spark, tmp_path):
     """A keyed micro-batch holding two files of symA and one of symB,
     then a batch of symB alone: per stream, the output equals that
-    stream's batch plan, with one broadcast per micro-batch."""
-    rows_a = tick_rows(20)
-    rows_b = [(i + 1, TS, 42100 + (i * 5) % 13, 1 + i % 2) for i in range(16)]
+    stream's batch plan over the parsed lines, with one broadcast per
+    micro-batch. Blank and malformed lines are dropped as read_tick_file
+    drops them, and a file name that needs URI escaping is read once, in
+    the batch's own scan."""
+    rows_a, rows_b = tick_rows(20), ROWS_B
     write_files(tmp_path / "in", [("000-symA.txt", rows_a[:9], 0), ("001-symB.txt", rows_b[:7], 0),
-                                  ("002-symA.txt", rows_a[9:], 0), ("003-symB.txt", rows_b[7:], 1)])
+                                  ("002 t%41-symA.txt", rows_a[9:], 0),
+                                  ("003-symB.txt", rows_b[7:], 1)], junk=True)
     ticks, bars = [], []
     mgr = TripleSplitManager()
     mgr.subscribe("cap", ConsumerType.PRIORITY, lambda df, bid: ticks.extend(df.collect()))
     cached = persistent_rdds(spark)
     pipe = run_pipe(spark, tmp_path, mgr, max_files_per_trigger=3, bar_cfg=BP, enrich=True,
-                    stream_key=lambda p: p.rsplit("-", 1)[-1],
-                    bar_sink=lambda df, bid: bars.extend(df.collect()))
+                    stream_key=sym_key, bar_sink=lambda df, bid: bars.extend(df.collect()))
 
     assert len(pipe.metrics.latencies_us) == 2
     assert mgr.total_broadcasts == pipe.metrics.broadcasts_sent == 2
@@ -166,13 +179,42 @@ def test_fanout_priority_failure_precedes_other_consumers(spark):
     assert (mgr.total_broadcasts, mgr.successful_broadcasts) == (2, 1)
 
 
-def test_runner_priority_failure_replays_batch(spark, tmp_path):
+# Two micro-batches of the fault-injection tests: (stream key, stream rows,
+# files as write_files takes them, max_files_per_trigger). One stream of
+# one file per batch, or two keyed streams, each batch holding both.
+ROWS_A = tick_rows(24)
+ONE_STREAM = (None, {"": ROWS_A},
+              [("t-000.txt", ROWS_A[:13], 0), ("t-001.txt", ROWS_A[13:], 1)], 1)
+TWO_STREAMS = (sym_key, {"symA.txt": ROWS_A, "symB.txt": ROWS_B},
+               [("000-symA.txt", ROWS_A[:13], 0), ("000-symB.txt", ROWS_B[:7], 0),
+                ("001-symA.txt", ROWS_A[13:], 1), ("001-symB.txt", ROWS_B[7:], 1)], 2)
+
+
+def first_batch_ticks(feed):
+    return sum(v for _, rows, arrival in feed[2] if arrival == 0 for *_, v in rows)
+
+
+def assert_streams_equal_batch_plan(spark, feed, delivered):
+    """Per stream, the delivered ticks equal the batch plan over the
+    stream's rows, with a dense tick_idx."""
+    key, streams = feed[0], feed[1]
+    for name, rows in streams.items():
+        want, _ = batch_plan(spark, rows)
+        got = sorted((r for r in delivered if key is None or r.stream == name),
+                     key=lambda r: r.tick_idx)
+        assert [r.tick_idx for r in got] == list(range(1, len(want) + 1)), name
+        assert_rows_equal(got, want, f"{name} ticks")
+
+
+@pytest.mark.parametrize("feed", [ONE_STREAM, TWO_STREAMS], ids=["one-stream", "two-streams"])
+def test_runner_priority_failure_replays_batch(spark, tmp_path, feed):
     """A PRIORITY sink that fails once on batch 1 fails that batch before
     any state is committed; a new pipeline on the same checkpoint and
-    state_path replays it, so PRIORITY rows equal the generated ticks with
-    a dense tick_idx. A failing MONITORING consumer is only counted."""
-    rows = tick_rows(24)
-    write_files(tmp_path / "in", [("t-000.txt", rows[:13], 0), ("t-001.txt", rows[13:], 1)])
+    state_path replays it, so each stream's PRIORITY rows equal its
+    generated ticks with a dense tick_idx. A failing MONITORING consumer
+    is only counted."""
+    stream_key, _, files, per_trigger = feed
+    write_files(tmp_path / "in", files)
     state_path = str(tmp_path / "state.json")
     delivered, failed = [], []
 
@@ -191,10 +233,11 @@ def test_runner_priority_failure_replays_batch(spark, tmp_path):
         mgr.subscribe("m", ConsumerType.MONITORING, monitoring)
         return mgr
 
+    kw = dict(state_path=state_path, bar_cfg=BP, enrich=True, stream_key=stream_key,
+              max_files_per_trigger=per_trigger)
     cached = persistent_rdds(spark)
     first = StreamingTickPipeline(spark, str(tmp_path / "in"), CFG, manager(),
-                                  checkpoint_dir=str(tmp_path / "ckpt"), state_path=state_path,
-                                  bar_cfg=BP, enrich=True)
+                                  checkpoint_dir=str(tmp_path / "ckpt"), **kw)
     first.start()
     try:
         with pytest.raises(Exception, match="priority sink down"):
@@ -203,18 +246,79 @@ def test_runner_priority_failure_replays_batch(spark, tmp_path):
         first.stop()
     assert failed == [1]
     assert first.metrics.errors == 1 and len(first.metrics.latencies_us) == 1
-    assert first.ticks_processed == sum(v for *_, v in rows[:13])
+    assert first.ticks_processed == first_batch_ticks(feed)
     assert json.loads((tmp_path / "state.json").read_text())["batch_id"] == 0
     assert persistent_rdds(spark) <= cached
 
-    second = run_pipe(spark, tmp_path, manager(), state_path=state_path, bar_cfg=BP,
-                      enrich=True)
+    second = run_pipe(spark, tmp_path, manager(), **kw)
     assert second.metrics.errors == 1
-    want, _ = batch_plan(spark, rows)
-    got = sorted(delivered, key=lambda r: r.tick_idx)
-    assert [r.tick_idx for r in got] == list(range(1, len(want) + 1))
-    assert_rows_equal(got, want, "ticks")
+    assert_streams_equal_batch_plan(spark, feed, delivered)
     assert persistent_rdds(spark) <= cached
+
+
+def test_runner_crash_after_sink_before_snapshot(spark, tmp_path, monkeypatch):
+    """A crash between the sink and the snapshot: PRIORITY has been fed
+    batch 1 when save_snapshot raises. A new pipeline on the same
+    checkpoint and state_path replays batch 1 under the same batch_id
+    with identical rows and ends in a clean run's state, so a sink that
+    is idempotent per batch_id ends exactly-once."""
+    from tickdatapipeline_spark.streaming import runner
+
+    feed = TWO_STREAMS
+    stream_key, _, files, per_trigger = feed
+    attempts, sink = {}, {}
+
+    def priority(df, bid):
+        rows = sorted(df.collect(), key=lambda r: (r.stream, r.tick_idx))
+        attempts.setdefault(bid, []).append(rows)
+        sink[bid] = rows
+
+    def pipeline(root):
+        mgr = TripleSplitManager()
+        mgr.subscribe("p", ConsumerType.PRIORITY, priority)
+        return StreamingTickPipeline(
+            spark, str(root / "in"), CFG, mgr, checkpoint_dir=str(root / "ckpt"),
+            state_path=str(root / "state.json"), bar_cfg=BP, enrich=True,
+            stream_key=stream_key, max_files_per_trigger=per_trigger)
+
+    save, crashed = runner.save_snapshot, []
+
+    def save_once_crashing(path, **kw):
+        if kw["batch_id"] == 1 and not crashed:
+            crashed.append(1)
+            raise OSError("crash before snapshot")
+        save(path, **kw)
+
+    monkeypatch.setattr(runner, "save_snapshot", save_once_crashing)
+    for root in ("run", "clean"):
+        write_files(tmp_path / root / "in", files)
+    first = pipeline(tmp_path / "run")
+    first.start()
+    try:
+        with pytest.raises(Exception, match="crash before snapshot"):
+            first.await_idle()
+    finally:
+        first.stop()
+    assert crashed == [1] and len(attempts[1]) == 1
+
+    second = pipeline(tmp_path / "run")
+    second.start()
+    try:
+        second.await_idle()
+    finally:
+        second.stop()
+    assert sorted(attempts) == [0, 1] and len(attempts[0]) == 1
+    assert len(attempts[1]) == 2 and attempts[1][0] == attempts[1][1]
+    assert_streams_equal_batch_plan(spark, feed, sink[0] + sink[1])
+
+    clean = pipeline(tmp_path / "clean")
+    clean.start()
+    try:
+        clean.await_idle()
+    finally:
+        clean.stop()
+    assert (second.states, second.bar_states, second.ticks_processed) == \
+        (clean.states, clean.bar_states, clean.ticks_processed)
 
 
 # A snapshot in the layout written before the single stream became the

@@ -200,7 +200,7 @@ def bar_aggregate(
     ticks: DataFrame,
     cfg: BarProcessingConfig,
     stream_id: str | None = None,
-    seed: "BarSeed | dict | None" = None,
+    seed: "dict | None" = None,
     chunk_size: int | None = None,
 ) -> DataFrame:
     """Tick stream -> one row per completed bar.
@@ -209,19 +209,20 @@ def bar_aggregate(
     Output: bar_idx (1-based), OHLC, bar_average_raw, bar_price_delta,
     bar_sig_re, bar_sig_im, bar_normalization, bar_flags, bar_ticks,
     bar_volume, bar_end_timestamp, end_tick_idx. ``seed`` continues from
-    a prior micro-batch: a single BarSeed (one-stream input) or, with
-    ``stream_id``, a {stream_key: BarSeed} mapping — per-stream state is
-    attached via a broadcast join of the (tiny) seed table, mirroring
-    the reference's per-stream BarProcessor state
-    (/root/reference/src/BarProcessor.jl:41-68). None == start of stream.
+    a prior micro-batch: with ``stream_id``, a {stream_key: BarSeed}
+    mapping attached via a broadcast join of the (tiny) seed table,
+    mirroring the reference's per-stream BarProcessor state
+    (reference src/BarProcessor.jl:41-68); a single stream is the
+    one-key map. None == start of every stream (the seed columns are
+    then literals).
 
-    ``chunk_size`` (single-stream batch, measured in TICKS like
+    ``chunk_size`` (unseeded batch, measured in TICKS like
     hot_loop's): two-pass chunked global order over the bar frame — the
     bar stream is ticks/n rows but still unbounded for a single 100 TB
     stream, so B4's cumulative H/L sums, the norm carry-forward and
     B5's prev-average lag each become chunk-local prefixes plus in-plan
     broadcast offsets (operators/globalorder.py), and ``k`` (1-based
-    bars-completed) reduces to the row-local ``bar_id + 1 + seed`` —
+    bars-completed) reduces to the row-local ``bar_id + 1`` —
     bar ids are dense, the trailing-partial filter only ever drops the
     last bar. Zero SinglePartition exchanges; bit-identical to the
     windowed plan (tests/test_bars.py).
@@ -230,16 +231,9 @@ def bar_aggregate(
         raise ValueError("bar processing disabled in config")
     part = [stream_id] if stream_id else []
     n = cfg.ticks_per_bar
-    use_chunks = chunk_size is not None and not isinstance(seed, dict)
-
-    seeds: dict | None = None
-    if isinstance(seed, dict):
-        if not stream_id:
-            raise ValueError("per-stream seeds require stream_id")
-        seeds = seed
-        s = BarSeed()  # defaults for streams absent from the mapping
-    else:
-        s = seed or BarSeed()
+    use_chunks = chunk_size is not None and seed is None
+    if seed is not None and not stream_id:
+        raise ValueError("per-stream seeds require stream_id")
 
     # DIV, not double '/'+cast: exact for any tick_idx (the double
     # quotient is only floor-exact below 2^53)
@@ -256,13 +250,14 @@ def bar_aggregate(
         F.count(F.lit(1)).alias("_cnt"),
     )
 
-    # Attach seed scalars as columns: literals for the single-seed path,
-    # a broadcast-joined row per stream for the mapping path. Everything
-    # downstream reads the _sd_* columns, so both paths share one plan.
-    if seeds is not None:
-        sd = _seed_table(ticks, seeds, stream_id)
+    # Attach seed scalars as columns: start-of-stream literals without a
+    # seed, a broadcast-joined row per stream for the mapping. Everything
+    # downstream reads the _sd_* columns, so both share one plan.
+    if seed is not None:
+        sd = _seed_table(ticks, seed, stream_id)
         bars = bars.join(F.broadcast(sd), on=part, how="left")
     else:
+        s = BarSeed()
         for name, val in [
             ("_sd_pcnt", s.partial_cnt0), ("_sd_popen", s.partial_open0),
             ("_sd_phigh", s.partial_high0), ("_sd_plow", s.partial_low0),
@@ -287,30 +282,17 @@ def bar_aggregate(
     if cfg.bar_method == "FIR":
         taps = design_decimation_filter(n)
         fir_src = ticks.select(*part, "tick_idx", "raw_price")
-        tail_rows: list = []
-        if seeds is not None:
-            tail_rows = [
-                (k, t_idx, price)
-                for k, sk in seeds.items()
-                for t_idx, price in sk.tail_prices0
-            ]
-            if tail_rows:
-                key_t = ticks.schema[stream_id].dataType.simpleString()
-                tail = ticks.sparkSession.createDataFrame(
-                    tail_rows, f"{stream_id} {key_t}, tick_idx long, raw_price long"
-                )
-                fir_src = fir_src.unionByName(tail)
-        elif s.tail_prices0:
+        tail_rows = [
+            (k, t_idx, price)
+            for k, sk in (seed or {}).items()
+            for t_idx, price in sk.tail_prices0
+        ]
+        if tail_rows:
+            key_t = ticks.schema[stream_id].dataType.simpleString()
             tail = ticks.sparkSession.createDataFrame(
-                list(s.tail_prices0), "tick_idx long, raw_price long"
+                tail_rows, f"{stream_id} {key_t}, tick_idx long, raw_price long"
             )
-            if part:
-                # single seed + stream column: like the scalar seed
-                # columns above, the one seed applies uniformly to
-                # every stream — replicate the tail per distinct stream
-                # (an O(streams) frame)
-                tail = ticks.select(*part).distinct().crossJoin(tail)
-            fir_src = fir_src.unionByName(tail.select(*part, "tick_idx", "raw_price"))
+            fir_src = fir_src.unionByName(tail)
         firs = _fir_averages(fir_src, part, taps, step=n, chunked=use_chunks)
         bars = bars.join(firs, on=part + ["end_tick_idx"])
     else:

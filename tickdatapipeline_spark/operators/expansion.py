@@ -92,8 +92,6 @@ def expand_volume(
     ticks_raw: DataFrame,
     stream_id: str | None = None,
     *,
-    seed_prev_last: int | None = None,
-    seed_tick0: int = 0,
     seeds: "dict | None" = None,
     chunk_size: int | None = None,
     valid_price_range: "tuple[int, int] | None" = None,
@@ -104,17 +102,17 @@ def expand_volume(
     replica_idx, line_no).
 
     Streaming seeds (micro-batch continuation, see streaming/state.py):
-    ``seed_prev_last`` is the last price of the previous batch (the first
-    line's delta becomes last - seed instead of 0); ``seed_tick0`` offsets
-    tick_idx so numbering stays dense across batches. With ``stream_id``,
-    ``seeds`` = {stream_key: (prev_last | None, tick0)} carries BOTH per
-    stream via a broadcast join of the (tiny) seed table — the shape that
-    holds when one micro-batch carries thousands of streams.
+    with ``stream_id``, ``seeds`` = {stream_key: (prev_last | None,
+    tick0)} — the last price of the stream's previous batch (its first
+    line's delta becomes last - prev_last instead of 0) and the ticks it
+    emitted so far (tick_idx stays dense across batches) — rides a
+    broadcast join of the (tiny) seed table. A single stream is the
+    one-key map. None == start of every stream.
 
     ``chunk_size``: use the two-pass chunked formulation
     (operators/globalorder.py) — no SinglePartition window; with
     ``stream_id`` every chunk window and offsets prefix is per-stream.
-    Only per-stream seed dicts stay on the windowed path.
+    Only seeded calls stay on the windowed path.
     The lag's cross-chunk patch is the previous chunk's final price; the
     tick numbering offset is the running sum of per-chunk expanded-row
     counts (sum of volumes) — both in-plan broadcast subqueries. Output
@@ -135,14 +133,13 @@ def expand_volume(
     if chunk_size is not None and seeds is None:
         return _expand_volume_chunked(
             ticks_raw, chunk_size, stream_id=stream_id,
-            seed_prev_last=seed_prev_last, seed_tick0=seed_tick0,
             valid_price_range=valid_price_range,
         )
     part = [stream_id] if stream_id else []
     w_lines = Window.partitionBy(*part).orderBy("line_no")
     w_ticks = Window.partitionBy(*part).orderBy("line_no", "replica_idx")
 
-    tick0_col = F.lit(seed_tick0)
+    tick0_col = F.lit(0)
     prev = F.lag("last").over(w_lines)
     if seeds is not None:
         if not stream_id:
@@ -155,8 +152,6 @@ def expand_volume(
         ticks_raw = ticks_raw.join(F.broadcast(sd), on=stream_id, how="left")
         prev = F.coalesce(prev, F.col("_xp_prev"))
         tick0_col = F.coalesce(F.col("_xp_t0"), F.lit(0))
-    elif seed_prev_last is not None:
-        prev = F.coalesce(prev, F.lit(seed_prev_last))
     df = ticks_raw.withColumn("prev_last", prev)
     return _expand_rows(df, part, w_ticks, tick0_col)
 
@@ -166,8 +161,6 @@ def _expand_volume_chunked(
     chunk_size: int,
     *,
     stream_id: str | None = None,
-    seed_prev_last: int | None,
-    seed_tick0: int,
     valid_price_range: "tuple[int, int] | None" = None,
 ) -> DataFrame:
     """Two-pass expand_volume (see expand_volume docstring). With
@@ -237,8 +230,6 @@ def _expand_volume_chunked(
     w_lines = Window.partitionBy(*part, GO_CHUNK).orderBy("line_no")
     w_ticks = Window.partitionBy(*part, GO_CHUNK).orderBy("line_no", "replica_idx")
     prev = F.coalesce(F.lag("last").over(w_lines), F.col("_go_prev"))
-    if seed_prev_last is not None:
-        prev = F.coalesce(prev, F.lit(seed_prev_last))
     df = df.withColumn("prev_last", prev)
-    tick0_col = F.coalesce("_go_t0", F.lit(0)) + F.lit(seed_tick0)
+    tick0_col = F.coalesce("_go_t0", F.lit(0))
     return _expand_rows(df, part, w_ticks, tick0_col, extra_cols=extra_cols)

@@ -85,7 +85,7 @@ def hot_loop(
     stream_id: str | None = None,
     stats_ticks_per_bar: int = C.STATS_TICKS_PER_BAR,
     keep_internals: bool = False,
-    seed: "HotLoopSeed | dict | None" = None,
+    seed: "dict | None" = None,
     chunk_size: int | None = None,
 ) -> DataFrame:
     """expanded ticks -> processed ticks.
@@ -93,11 +93,11 @@ def hot_loop(
     Input: (tick_idx, timestamp, raw_price, price_delta [, stream_id]).
     Output: input cols + (sig_re, sig_im, normalization, status_flag)
     [+ internals when keep_internals]. ``seed`` continues from a prior
-    micro-batch (see HotLoopSeed): a single seed (one-stream input) or,
-    with ``stream_id``, a {stream_key: HotLoopSeed} mapping — per-stream
-    state is attached via a broadcast join of the (tiny) seed table,
-    mirroring the reference's one-TickHotLoopState-per-stream model.
-    None == start of stream.
+    micro-batch (see HotLoopSeed): with ``stream_id``, a {stream_key:
+    HotLoopSeed} mapping attached via a broadcast join of the (tiny) seed
+    table, mirroring the reference's one-TickHotLoopState-per-stream
+    model; a single stream is the one-key map. None == start of every
+    stream (the seed columns are then literals).
 
     ``chunk_size``: two-pass chunked global order — every running
     quantity becomes a chunk-local window prefix plus a broadcast
@@ -105,18 +105,18 @@ def hot_loop(
     SinglePartition exchange. Applies to the single-stream batch plan
     AND, with ``stream_id``, to multistream batches whose individual
     streams are long (windows then partition by (stream, chunk));
-    only per-stream seed DICTS disable it (they stay on the windowed
-    path). The cumulative-valid offsets are an in-plan broadcast
-    subquery; core_seq then needs NO second pass — it is the row-local
-    function valid_cum - 1[seed==0 and a first-valid row seen],
-    because exactly one valid row per cold stream is non-core. Bit-
-    identical to the windowed plan (pinned by tests).
+    a seed disables it (seeded calls stay on the windowed path). The
+    cumulative-valid offsets are an in-plan broadcast subquery; core_seq
+    then needs NO second pass — it is the row-local function valid_cum -
+    1[a first-valid row seen], because exactly one valid row per cold
+    stream is non-core. Bit-identical to the windowed plan (pinned by
+    tests).
     """
     # chunked two-pass applies to the single-stream batch plan AND, with
     # stream_id, to multistream batches whose INDIVIDUAL streams are long
     # (windows partition by (stream, chunk); every offsets subquery is
-    # per-stream). Per-stream seed dicts stay on the windowed path.
-    use_chunks = chunk_size is not None and not isinstance(seed, dict)
+    # per-stream). Seeded calls stay on the windowed path.
+    use_chunks = chunk_size is not None and seed is None
     part = [stream_id] if stream_id else []
     if use_chunks:
         from tickdatapipeline_spark.operators.globalorder import (
@@ -132,8 +132,8 @@ def hot_loop(
         w = Window.partitionBy(*part).orderBy("tick_idx")
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
 
-    # Seed scalars become _hs_* columns: literals for the single-seed
-    # path, a broadcast-joined row per stream for a {key: HotLoopSeed}
+    # Seed scalars become _hs_* columns: start-of-stream literals without
+    # a seed, a broadcast-joined row per stream for a {key: HotLoopSeed}
     # mapping (mirrors bar_aggregate's per-stream BarSeed; reference
     # keeps one TickHotLoopState per stream). Downstream reads only the
     # columns, so both paths share one plan.
@@ -151,7 +151,7 @@ def hot_loop(
         ("_hs_lratio", "last_core_ratio0", "double", 0.0),
     ]
 
-    if isinstance(seed, dict):
+    if seed is not None:
         if not stream_id:
             raise ValueError("per-stream seeds require stream_id")
         key_t = expanded.schema[stream_id].dataType.simpleString()
@@ -167,7 +167,7 @@ def hot_loop(
         def _with_seed_cols(frame: DataFrame) -> DataFrame:
             return frame.join(seed_tbl, on=part, how="left")
     else:
-        s = seed or HotLoopSeed()
+        s = HotLoopSeed()
 
         def _with_seed_cols(frame: DataFrame) -> DataFrame:
             for c, a, t, _d in _HS_FIELDS:
@@ -230,12 +230,8 @@ def hot_loop(
     # Bar position over core (accepted) ticks only (:377-381).
     if use_chunks:
         # row-local: valid rows are all core except the single `first`
-        # row a cold stream has (seed n_valid0 == 0) — no second pass
-        first_corr = (
-            F.when(F.col("_go_bvc") >= 1, F.lit(1)).otherwise(F.lit(0))
-            if (seed or HotLoopSeed()).n_valid0 == 0
-            else F.lit(0)
-        )
+        # row every (unseeded, so cold) stream has — no second pass
+        first_corr = F.when(F.col("_go_bvc") >= 1, F.lit(1)).otherwise(F.lit(0))
         df = df.withColumn(
             "core_seq", F.col("_go_bvc") - first_corr + _hs("_hs_cseq")
         )

@@ -2,9 +2,13 @@
 
 S1-S3 from SURVEY.md §2.1: semicolon tick-file scan, tokenizer and
 malformed-record skip (/root/reference/src/VolumeExpansion.jl:95-113,
-:145-218). Plus a deterministic derivation of the same tick shape from
-the driver's `events` parquet table, used so the Spark engine and the
-DuckDB oracle see identical inputs without writing new files.
+:145-218). One parse (``_parse_tick_lines``) serves every tick-file
+reader: read_tick_file (one file, one global line order), read_tick_files
+(one stream per file) and the live runner's micro-batch read (one
+stream per key, streaming/runner.py). Plus a deterministic derivation of
+the same tick shape from the `events` parquet table, used so the Spark
+engine and the DuckDB oracle see identical inputs without writing new
+files.
 
 Scale note: the reader is a plain distributed text scan; `line_no` is a
 within-stream ordering key. At 100 TB you ingest one file/partition per
@@ -24,69 +28,50 @@ from tickdatapipeline_spark.sources.io import read_parquet
 # (README.md:137-154, VolumeExpansion.jl:84-113)
 
 
-def read_tick_file(
-    spark: SparkSession, path: str, distributed_numbering: bool = False
+def _parse_tick_lines(
+    lines: DataFrame, part: list[str], order: list[str]
 ) -> DataFrame:
-    """Parse a semicolon tick file into (line_no, ts_str, bid, ask, last, volume).
+    """The one tick-line parse: a text scan's ``value`` column ->
+    (*part, line_no, ts_str, bid, ask, last, volume).
 
     Mirrors parse_tick_line (VolumeExpansion.jl:95-113): split on ';',
     require exactly 5 fields, integer-parse fields 2-5 (null on failure),
-    silently drop empty/malformed lines (:162-171). `line_no` numbers the
-    *parsed* lines, matching the reference's first_tick/previous_last
-    bookkeeping which only advances on successful parses.
-
-    ``distributed_numbering``: number lines with the two-pass chunked
-    formulation instead of a SinglePartition row_number window. The
-    natural chunk is the FILE SPLIT: ``monotonically_increasing_id()``
-    is (partition_index << 33) + offset for a text scan, so its high
-    bits are a monotone chunk id in file-byte order and the low bits
-    order lines within the split — line_no = split-local row_number +
-    broadcast per-split count offsets (operators/globalorder.py). Same
-    values; the output carries the chunk column for downstream reuse.
+    silently drop empty/malformed lines (:162-171). ``line_no`` numbers
+    the *parsed* lines per ``part`` in (``order``, scan position) order,
+    matching the reference's first_tick/previous_last bookkeeping which
+    only advances on successful parses. The scan position is taken before
+    the blank-line filter, so it follows file byte order.
     """
-    lines = spark.read.text(path)
     parts = F.split(F.col("value"), ";")
+    fields = ["bid", "ask", "last", "volume"]
     df = (
         lines.withColumn("_mid", F.monotonically_increasing_id())
         .where(F.length(F.trim(F.col("value"))) > 0)
         .withColumn("_parts", parts)
         # F.get is 0-based and null-safe on short arrays (ANSI mode keeps
         # element_at strict); try_cast nulls out non-integer fields.
-        .withColumn("ts_str", F.trim(F.get("_parts", 0)))
-        .withColumn("bid", F.trim(F.get("_parts", 1)).try_cast("long"))
-        .withColumn("ask", F.trim(F.get("_parts", 2)).try_cast("long"))
-        .withColumn("last", F.trim(F.get("_parts", 3)).try_cast("long"))
-        .withColumn("volume", F.trim(F.get("_parts", 4)).try_cast("long"))
-        .where(
-            (F.size("_parts") == 5)
-            & F.col("bid").isNotNull()
-            & F.col("ask").isNotNull()
-            & F.col("last").isNotNull()
-            & F.col("volume").isNotNull()
-        )
-    )
-    if not distributed_numbering:
-        return (
-            df.withColumn("line_no", F.row_number().over(Window.orderBy("_mid")))
-            .select("line_no", "ts_str", "bid", "ask", "last", "volume")
-        )
-
-    from tickdatapipeline_spark.operators.globalorder import (
-        GO_CHUNK,
-        chunk_offsets_plan,
-    )
-
-    df = df.withColumn(GO_CHUNK, F.shiftrightunsigned("_mid", 33))
-    off = chunk_offsets_plan(df, sums={"_go_ln0": F.lit(1)})
-    wloc = Window.partitionBy(GO_CHUNK).orderBy("_mid")
-    return (
-        df.join(F.broadcast(off), on=GO_CHUNK, how="left")
         .select(
-            (F.row_number().over(wloc) + F.coalesce("_go_ln0", F.lit(0)))
-            .cast("long").alias("line_no"),
-            "ts_str", "bid", "ask", "last", "volume", GO_CHUNK,
+            *part, *order, "_mid", "_parts",
+            F.trim(F.get("_parts", 0)).alias("ts_str"),
+            *[F.trim(F.get("_parts", i + 1)).try_cast("long").alias(c)
+              for i, c in enumerate(fields)],
         )
+        .where((F.size("_parts") == 5) & F.col("bid").isNotNull()
+               & F.col("ask").isNotNull() & F.col("last").isNotNull()
+               & F.col("volume").isNotNull())
     )
+    w = Window.partitionBy(*part).orderBy(*order, "_mid")
+    return df.withColumn("line_no", F.row_number().over(w)).select(
+        *part, "line_no", "ts_str", *fields)
+
+
+def read_tick_file(spark: SparkSession, path: str) -> DataFrame:
+    """Parse a semicolon tick file into (line_no, ts_str, bid, ask, last, volume).
+
+    ``line_no`` numbers the parsed lines in file order (see
+    ``_parse_tick_lines``) through one SinglePartition row_number window.
+    """
+    return _parse_tick_lines(spark.read.text(path), [], [])
 
 
 # --- deterministic events -> ticks derivation (shared with DuckDB oracle) ---
@@ -221,31 +206,15 @@ def ticks_from_events(
 def read_tick_files(spark: SparkSession, path_glob: str) -> DataFrame:
     """Multi-file scan: one logical stream per file (the deployment unit).
 
-    Output adds a `stream` column (the file path); `line_no` restarts per
+    Output adds a `stream` column (the file path as ``input_file_name()``
+    reports it); the parse is read_tick_file's, but `line_no` restarts per
     file and every window downstream partitions by stream — this is the
     read path that scales, unlike read_tick_file's single global order.
+    The live runner reads a micro-batch the same way, keyed by stream
+    instead of by file.
     """
     lines = spark.read.text(path_glob).withColumn("stream", F.input_file_name())
-    parts = F.split(F.col("value"), ";")
-    w = Window.partitionBy("stream").orderBy(F.monotonically_increasing_id())
-    return (
-        lines.where(F.length(F.trim(F.col("value"))) > 0)
-        .withColumn("_parts", parts)
-        .withColumn("ts_str", F.trim(F.get("_parts", 0)))
-        .withColumn("bid", F.trim(F.get("_parts", 1)).try_cast("long"))
-        .withColumn("ask", F.trim(F.get("_parts", 2)).try_cast("long"))
-        .withColumn("last", F.trim(F.get("_parts", 3)).try_cast("long"))
-        .withColumn("volume", F.trim(F.get("_parts", 4)).try_cast("long"))
-        .where(
-            (F.size("_parts") == 5)
-            & F.col("bid").isNotNull()
-            & F.col("ask").isNotNull()
-            & F.col("last").isNotNull()
-            & F.col("volume").isNotNull()
-        )
-        .withColumn("line_no", F.row_number().over(w))
-        .select("stream", "line_no", "ts_str", "bid", "ask", "last", "volume")
-    )
+    return _parse_tick_lines(lines, ["stream"], [])
 
 
 # --- multi-stream variant: the 100 TB deployment shape ---

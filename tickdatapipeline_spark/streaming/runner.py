@@ -11,15 +11,15 @@ Rate limiting is `maxFilesPerTrigger` instead of a busy-wait nanosleep —
 the idiomatic Spark knob for the same goal (SURVEY.md §2.2 P10).
 
 Ordering: Spark's file source admits files in MODIFICATION-TIME order
-across micro-batches. Within a batch each file is re-read through
-sources.tickfile.read_tick_file, which defines line order, and tagged
-with its stream key; per stream, the batch is ordered by file name, then
-line — one union, one seeded pass, however many files it holds. The
-stream contract is therefore: a stream's files arrive (mtime) in stream
-order and are named monotonically — which is how session/day capture
-files are produced. A count-ordered stream cannot admit late data — there
-is no watermark by design, matching the reference's strictly-ordered
-Channel (SURVEY §2.9).
+across micro-batches. Within a batch the files are parsed in the batch's
+own scan, with the tick-line parse of sources.tickfile, and each line is
+tagged with its file's stream key; per stream, the batch is ordered by
+file name, then line — one source exchange, one seeded pass, however
+many files it holds. The stream contract is therefore: a stream's files
+arrive (mtime) in stream order and are named monotonically — which is
+how session/day capture files are produced. A count-ordered stream
+cannot admit late data — there is no watermark by design, matching the
+reference's strictly-ordered Channel (SURVEY §2.9).
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from tickdatapipeline_spark.config import SignalProcessingConfig
 from tickdatapipeline_spark.operators.bars import BarSeed, enrich_ticks_with_bars
-from tickdatapipeline_spark.sources.tickfile import read_tick_file
+from tickdatapipeline_spark.sources.tickfile import _parse_tick_lines
 from tickdatapipeline_spark.streaming.fanout import TripleSplitManager
 from tickdatapipeline_spark.streaming.metrics import PipelineMetrics
 from tickdatapipeline_spark.streaming.persistence import load_snapshot, save_snapshot
@@ -114,20 +114,19 @@ class StreamingTickPipeline:
 
     def _read_batch(self, batch_df: DataFrame) -> DataFrame | None:
         """The batch's files as one keyed ticks_raw frame (None if the
-        batch holds no file). Each file is tagged with its stream key, and
-        its line_no is offset by its rank among the batch's files of that
-        stream (in name order), so line_no orders each stream by (file
-        name, line)."""
-        files = batch_df.select(F.input_file_name().alias("f")).distinct().collect()
-        raw, rank = None, {}
-        for path in sorted(r["f"] for r in files):
-            key = self.stream_key(path) if self.stream_key else ONE_KEY
-            rank[key] = rank.get(key, -1) + 1
-            part = read_tick_file(self.spark, path).withColumns({
-                KEY: F.lit(key), "line_no": F.col("line_no") + F.lit(rank[key] << 32),
-            })
-            raw = part if raw is None else raw.unionByName(part)
-        return raw
+        batch holds no line), parsed in the batch's own scan. Each line
+        is tagged with its file's stream key through a literal map over
+        the batch's file names, and line_no numbers each stream by (file
+        name, line): one exchange, however many files the batch holds."""
+        files = [r[0] for r in batch_df.select(F.input_file_name()).distinct().collect()]
+        if not files:
+            return None
+        key = self.stream_key or (lambda _path: ONE_KEY)
+        lookup = F.create_map(*[F.lit(x) for f in files for x in (f, key(f))])
+        lines = batch_df.withColumn("_file", F.input_file_name())
+        return _parse_tick_lines(
+            lines.withColumn(KEY, lookup[F.col("_file")]), [KEY], ["_file"]
+        )
 
     # -- one micro-batch: keyed read -> seeded ops -> one broadcast -------
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
