@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import replace
 
 import pytest
 
@@ -14,13 +15,14 @@ from tests.conftest import make_ticks_raw
 from tests.test_sources import write_file
 from tests.test_streaming import TS, tick_rows
 from tickdatapipeline_spark.config import BarProcessingConfig, SignalProcessingConfig
-from tickdatapipeline_spark.operators.bars import bar_aggregate, enrich_ticks_with_bars
+from tickdatapipeline_spark.operators.bars import BarSeed, bar_aggregate, enrich_ticks_with_bars
 from tickdatapipeline_spark.operators.expansion import expand_volume
-from tickdatapipeline_spark.operators.hotloop import hot_loop
+from tickdatapipeline_spark.operators.hotloop import HotLoopSeed, hot_loop
 from tickdatapipeline_spark.streaming import (
     OUT_COLS,
     ConsumerType,
     StreamingTickPipeline,
+    StreamState,
     TripleSplitManager,
 )
 
@@ -356,3 +358,96 @@ def test_runner_resumes_legacy_snapshot_layout(spark, tmp_path):
     assert_rows_equal(sorted(bars, key=lambda r: r.bar_idx), want_bars[4:], "bars")
     assert pipe.ticks_processed == len(want_ticks)
     assert "single" not in json.loads(state_path.read_text())
+
+
+# Two keyed micro-batches, stats bars and OHLC bars of 5 ticks. After
+# batch 1, A and B each carry an unfinished stats bar and OHLC bar; in
+# batch 2 A's complete (a hold-last row included) while B's stay open,
+# C opens with out-of-range prices (zero rows) and D, seeded, is idle.
+SEED_BATCHES = [
+    {"A": [41970, 41975, 41960, 41968, 41990, 41985, 41987],
+     "B": [42100, (42104, 2), 42101, 42109, 42106, 42110, 42103],
+     "D": [41500, 41508, (41503, 2), 41511]},
+    {"A": [41980, 99999, 41983, 41979, 41995, 41990],
+     "B": [42107],
+     "C": [30000, 50000, 30000, 41200, 41204, 41199, 41230, 41226, 41228, 41225]},
+]
+
+
+def seed_batch(spark, lines):
+    """{key: [price | (price, volume)]} -> one keyed ticks_raw frame."""
+    rows = [
+        (key, i + 1, TS, p - 1, p + 1, p, v)
+        for key, prices in lines.items()
+        for i, (p, v) in enumerate(x if isinstance(x, tuple) else (x, 1) for x in prices)
+    ]
+    return spark.createDataFrame(
+        rows, "stream string, line_no long, ts_str string, bid long, ask long, "
+        "last long, volume long")
+
+
+def test_next_seeds_pinned(spark):
+    """The next {key: seed} maps of the hot loop, boxcar bars and FIR bars
+    after two keyed micro-batches, every field pinned to recorded values:
+    carried stats/OHLC bars that complete and that stay open, a new
+    stream opening on zero rows and a seeded stream idle in the batch."""
+    from tickdatapipeline_spark.streaming.state import (
+        KEY,
+        advance_bars_streams,
+        advance_streams,
+    )
+
+    fir = BarProcessingConfig(enabled=True, ticks_per_bar=5, bar_method="FIR",
+                              normalization_window_bars=2)
+    states, bar_states = {}, {"boxcar": {}, "FIR": {}}
+    for lines in SEED_BATCHES:
+        processed, states = advance_streams(seed_batch(spark, lines), CFG, states, KEY,
+                                            stats_ticks_per_bar=5)
+        for bp in (BP, fir):
+            bars, bar_states[bp.bar_method] = advance_bars_streams(
+                processed.select(KEY, *OUT_COLS), bp, bar_states[bp.bar_method], KEY)
+            bars.unpersist()
+        processed.unpersist()
+    assert states == {
+        "A": StreamState(tick0=13, prev_last=41990, hot=HotLoopSeed(
+            n_valid0=12, core_seq0=11, sum_bmin0=-20, sum_bmax0=20, partial_cnt0=1,
+            partial_min0=-5, partial_max0=-5, inv_q16_0=3277, cpm_theta0=1179779072,
+            amc_n0=13, last_core_ratio0=-0.2500152587890625)),
+        "B": StreamState(tick0=9, prev_last=42107, hot=HotLoopSeed(
+            n_valid0=9, core_seq0=8, sum_bmin0=-3, sum_bmax0=8, partial_cnt0=3,
+            partial_min0=-7, partial_max0=4, inv_q16_0=5958, cpm_theta0=1838776320,
+            amc_n0=9, last_core_ratio0=0.3636474609375)),
+        "C": StreamState(tick0=10, prev_last=41225, hot=HotLoopSeed(
+            n_valid0=7, core_seq0=6, sum_bmin0=-5, sum_bmax0=10, partial_cnt0=1,
+            partial_min0=-3, partial_max0=-3, inv_q16_0=4369, cpm_theta0=1095303168,
+            amc_n0=7, last_core_ratio0=-0.1999969482421875)),
+        "D": StreamState(tick0=5, prev_last=41511, hot=HotLoopSeed(
+            n_valid0=5, core_seq0=4, sum_bmin0=0, sum_bmax0=0, partial_cnt0=4,
+            partial_min0=-5, partial_max0=8, inv_q16_0=7559, cpm_theta0=2724626432,
+            amc_n0=5, last_core_ratio0=0.9227294921875)),
+    }
+    boxcar = {
+        "A": BarSeed(partial_cnt0=3, partial_open0=41979, partial_high0=41995,
+                     partial_low0=41979, bars_done0=2, prev_avg0=61321, sum_high0=141989,
+                     sum_low0=83940, norm0=29024.5),
+        "B": BarSeed(partial_cnt0=4, partial_open0=42106, partial_high0=42110,
+                     partial_low0=42103, bars_done0=1, prev_avg0=42106, sum_high0=42109,
+                     sum_low0=42100, norm0=1.0),
+        "C": BarSeed(bars_done0=2, prev_avg0=41218, sum_high0=91230, sum_low0=71199,
+                     norm0=10015.5),
+        "D": BarSeed(bars_done0=1, prev_avg0=41507, sum_high0=41511, sum_low0=41500,
+                     norm0=1.0),
+    }
+    assert bar_states["boxcar"] == boxcar
+    # FIR differs only in the averages and the carried price tail, which
+    # holds every tick while a stream is shorter than the filter
+    ticks = {"A": [41970, 41975, 41960, 41968, 41990, 41985, 41987, 41980, 99999, 41983,
+                   41979, 41995, 41990],
+             "B": [42100, 42104, 42104, 42101, 42109, 42106, 42110, 42103, 42107],
+             "C": [30000, 50000, 30000, 41200, 41204, 41199, 41230, 41226, 41228, 41225],
+             "D": [41500, 41508, 41503, 41503, 41511]}
+    fir_avg = {"A": -2, "B": 1, "C": -2, "D": 1}
+    assert bar_states["FIR"] == {
+        k: replace(s, prev_avg0=fir_avg[k], tail_prices0=tuple(enumerate(ticks[k], 1)))
+        for k, s in boxcar.items()
+    }

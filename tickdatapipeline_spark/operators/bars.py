@@ -44,19 +44,24 @@ class BarSeed:
     plus one bounded buffer: the unfinished OHLC bar, the lag value for
     bar deltas, cumulative high/low sums for normalization epochs, and
     (FIR only) the trailing raw prices that the next completion's
-    convolution can still reach. Defaults = start of stream.
+    convolution can still reach. streaming/state.py reads the next seed
+    from each stream's last tick and last bar; the comments name the
+    column each field comes from (tick ids are dense per stream, so the
+    last tick_idx fixes the bar count). The trailing bar's open/high/low
+    merge with the carried bar's only while that bar is still open.
+    Defaults = start of stream.
     """
 
-    partial_cnt0: int = 0          # ticks in the unfinished bar
-    partial_open0: int | None = None
-    partial_high0: int | None = None
-    partial_low0: int | None = None
-    bars_done0: int = 0            # completed bars so far (lag/row_number offset)
-    prev_avg0: int | None = None   # last completed bar's average_raw
-    sum_high0: int = 0             # cumulative bar-high sum
-    sum_low0: int = 0              # cumulative bar-low sum
-    norm0: float = 1.0             # latest recomputed normalization
-    tail_prices0: tuple[tuple[int, int], ...] = field(default=())  # (tick_idx, price) FIR tail
+    partial_cnt0: int = 0          # ticks in the unfinished bar: last tick_idx % n
+    partial_open0: int | None = None  # its raw_price at the lowest tick_idx
+    partial_high0: int | None = None  # its max raw_price
+    partial_low0: int | None = None   # its min raw_price
+    bars_done0: int = 0            # completed bars so far: last tick_idx DIV n
+    prev_avg0: int | None = None   # last bar's bar_average_raw
+    sum_high0: int = 0             # cumulative bar-high sum: seed + sum of bar_high_raw
+    sum_low0: int = 0              # cumulative bar-low sum: seed + sum of bar_low_raw
+    norm0: float = 1.0             # latest recomputed normalization: last bar's bar_normalization
+    tail_prices0: tuple[tuple[int, int], ...] = field(default=())  # (tick_idx, raw_price) of the last L-1 ticks
 
 
 # Q33 fixed-point tap quantization for the FIR convolution. Products

@@ -70,7 +70,9 @@ def _expand_rows(df: DataFrame, part: list[str], w_ticks, tick0_col,
     Expects ``prev_last`` already attached. volume < 1 must yield ZERO
     replicas (Julia `for 1:0` is empty), but Spark's sequence(start,
     stop) auto-steps -1 when stop < start — so gate it; explode(NULL)
-    emits no rows, matching generate_series(1,0)."""
+    emits no rows, matching generate_series(1,0). ``extra_cols`` leave
+    without their metadata: the source's dense-``line_no`` claim on the
+    chunk column does not hold for the replicas."""
     seq = F.when(F.col("volume") >= 1, F.sequence(F.lit(1), F.col("volume")))
     df = df.withColumn("replica_idx", F.explode(seq))
     delta = (
@@ -84,7 +86,7 @@ def _expand_rows(df: DataFrame, part: list[str], w_ticks, tick0_col,
         packed_timestamp(F.col("ts_str")).alias("timestamp"),
         F.col("last").cast("long").alias("raw_price"),
         delta.cast("long").alias("price_delta"),
-        *extra_cols,
+        *[F.col(c).alias(c, metadata={}) for c in extra_cols],
     )
 
 

@@ -46,22 +46,24 @@ class HotLoopSeed:
     """Prefix state carried across streaming micro-batches.
 
     Every stateful quantity in the hot loop is a prefix aggregate, so a
-    batch can be processed exactly given these offsets (streaming/state.py
-    extracts the next seed from each processed batch). Defaults = the
+    batch can be processed exactly given these offsets. The next seed is
+    the value of hot_loop(keep_internals=True)'s running columns on each
+    stream's last row (streaming/state.py reads them with one grouped
+    aggregate); the comments name each field's column. Defaults = the
     start-of-stream state, making the batch path a seed of zeros.
     """
 
-    n_valid0: int = 0          # valid ticks seen in prior batches
-    core_seq0: int = 0         # core (accepted) ticks seen
-    sum_bmin0: int = 0         # cumulative per-stats-bar min-delta sum
-    sum_bmax0: int = 0         # cumulative per-stats-bar max-delta sum
-    partial_cnt0: int = 0      # core ticks in the unfinished stats bar
-    partial_min0: int | None = None
-    partial_max0: int | None = None
-    inv_q16_0: int = C.PRELOAD_INV_NORM_Q16  # latest cached Q16 reciprocal
-    cpm_theta0: int = 0        # CPM phase accumulator mod 2^32
-    amc_n0: int = 0            # AMC carrier position (invoked rows seen)
-    last_core_ratio0: float = 0.0  # derivative encoder's prev ratio
+    n_valid0: int = 0          # valid ticks seen: n_valid_upto
+    core_seq0: int = 0         # core (accepted) ticks seen: core_seq
+    sum_bmin0: int = 0         # completed stats bars' min-delta sum: sum_bmin_upto
+    sum_bmax0: int = 0         # completed stats bars' max-delta sum: sum_bmax_upto
+    partial_cnt0: int = 0      # core ticks in the unfinished stats bar: core_seq % n
+    partial_min0: int | None = None  # its min delta: bar_dmin over the last bar_ord
+    partial_max0: int | None = None  # its max delta: bar_dmax over the last bar_ord
+    inv_q16_0: int = C.PRELOAD_INV_NORM_Q16  # latest cached Q16 reciprocal: inv_q16
+    cpm_theta0: int = 0        # CPM phase accumulator mod 2^32: seed + sum of ratio's dp
+    amc_n0: int = 0            # AMC carrier position: seed + rows with n_valid_upto > 0
+    last_core_ratio0: float = 0.0  # derivative encoder's prev ratio: ratio
 
 
 def _hexad_expr(ratio: Column, tick_idx: Column) -> tuple[Column, Column]:
@@ -92,7 +94,8 @@ def hot_loop(
 
     Input: (tick_idx, timestamp, raw_price, price_delta [, stream_id]).
     Output: input cols + (sig_re, sig_im, normalization, status_flag)
-    [+ internals when keep_internals]. ``seed`` continues from a prior
+    [+ internals when keep_internals, among them the running columns
+    the next HotLoopSeed is read from]. ``seed`` continues from a prior
     micro-batch (see HotLoopSeed): with ``stream_id``, a {stream_key:
     HotLoopSeed} mapping attached via a broadcast join of the (tiny) seed
     table, mirroring the reference's one-TickHotLoopState-per-stream
@@ -319,10 +322,10 @@ def hot_loop(
         cum_bmin = F.sum("bmin").over(wb)
         cum_bmax = F.sum("bmax").over(wb)
     k = (F.col("bar_ord") + 1).cast("double")
+    sum_bmin = cum_bmin + _hs("_hs_sbmin")
+    sum_bmax = cum_bmax + _hs("_hs_sbmax")
     norm = F.greatest(
-        (cum_bmax + _hs("_hs_sbmax")).cast("double") / k
-        - (cum_bmin + _hs("_hs_sbmin")).cast("double") / k,
-        F.lit(1.0),
+        sum_bmax.cast("double") / k - sum_bmin.cast("double") / k, F.lit(1.0)
     )
     norms = bars.select(
         *part,
@@ -331,6 +334,9 @@ def hot_loop(
         # (TickHotLoopF32.jl:397 Int32(round(65536f0/norm))); reachable
         # e.g. at norm = 131072 where 0.5 must round DOWN to 0.
         F.bround(F.lit(65536.0) / norm, 0).cast("long").alias("inv_q16"),
+        # the running sums a continuation seed reads (HotLoopSeed)
+        *([sum_bmin.alias("sum_bmin_upto"), sum_bmax.alias("sum_bmax_upto")]
+          if keep_internals else []),
     )
     if use_chunks:
         # tiny relative to ticks; pin so the encoder-stage summary job
@@ -491,7 +497,12 @@ def hot_loop(
         "status_flag",
     ]
     if keep_internals:
-        out_cols += ["is_valid", "is_core", "core_seq", "delta_w", "bar_ord", "bars_done", "inv_q16", "nq16", "ratio"]
+        out_cols += ["is_valid", "is_core", "core_seq", "delta_w", "bar_ord", "bars_done", "inv_q16", "nq16", "ratio",
+                     "n_valid_upto", "sum_bmin_upto", "sum_bmax_upto",
+                     # delta_w merged with the carried stats bar: the
+                     # row-level twin of the bars' is_pb merge
+                     F.when(is_pb, F.least("delta_w", "_hs_pmin")).otherwise(F.col("delta_w")).alias("bar_dmin"),
+                     F.when(is_pb, F.greatest("delta_w", "_hs_pmax")).otherwise(F.col("delta_w")).alias("bar_dmax")]
         if enc == "cpm":
             out_cols += ["cpm_theta"]
     return df.select(*out_cols)

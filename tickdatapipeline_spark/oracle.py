@@ -142,12 +142,14 @@ bar_norms AS (
            CAST(round_even(65536.0::DOUBLE / greatest(
                 CAST(sum(bmax) OVER wb AS DOUBLE) / CAST(bar_ord + 1 AS DOUBLE)
               - CAST(sum(bmin) OVER wb AS DOUBLE) / CAST(bar_ord + 1 AS DOUBLE),
-                1.0::DOUBLE), 0) AS BIGINT) AS inv_q16
+                1.0::DOUBLE), 0) AS BIGINT) AS inv_q16,
+           CAST(sum(bmin) OVER wb AS BIGINT) AS sum_bmin_upto,
+           CAST(sum(bmax) OVER wb AS BIGINT) AS sum_bmax_upto
     FROM stat_bars WHERE cnt = {n}
     WINDOW wb AS ({pby}ORDER BY bar_ord ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 ),
 joined AS (
-    SELECT h.*,
+    SELECT h.*, b.sum_bmin_upto, b.sum_bmax_upto,
            CASE WHEN h.is_core THEN COALESCE(b.inv_q16, {C.PRELOAD_INV_NORM_Q16}) END AS inv_q16,
            CASE WHEN h.is_core THEN h.delta_w * COALESCE(b.inv_q16, {C.PRELOAD_INV_NORM_Q16}) END AS nq16,
            CASE WHEN h.is_core
@@ -181,7 +183,8 @@ ticks_out AS (
     SELECT {sc}tick_idx, timestamp, raw_price, price_delta,
            {sig},
            normalization, status_flag,
-           is_valid, is_core, is_zero, core_seq, delta_w, bar_ord, bars_done, inv_q16, nq16, ratio{", cpm_theta" if enc == "cpm" else ""}
+           is_valid, is_core, is_zero, core_seq, delta_w, bar_ord, bars_done, inv_q16, nq16, ratio,
+           n_valid_upto, sum_bmin_upto, sum_bmax_upto, delta_w AS bar_dmin, delta_w AS bar_dmax{", cpm_theta" if enc == "cpm" else ""}
     FROM phased
 )
 """

@@ -57,19 +57,27 @@ def build_processed(spark: SparkSession, cfg: PipelineConfig,
     return processed
 
 
+def _run(spark: SparkSession, cfg: PipelineConfig, output_path: str,
+         max_ticks: int | None, with_bars: bool) -> PipelineResult:
+    """The body of both entry points: plan, write, count what landed.
+    Without bars the output is hot_loop's, i.e. TICK_CAPTURE_COLS."""
+    t0 = time.time()
+    out = processed = build_processed(spark, cfg, max_ticks)
+    if with_bars:
+        out = enrich_ticks_with_bars(processed, bar_aggregate(processed, cfg.bar_processing))
+    t1 = time.time()
+    out.write.mode("overwrite").parquet(output_path)
+    t2 = time.time()
+    return PipelineResult(
+        ticks_processed=spark.read.parquet(output_path).count(), errors=0,
+        elapsed_s=t2 - t0, signal_stage_s=t1 - t0, sink_stage_s=t2 - t1,
+    )
+
+
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig, output_path: str,
                  max_ticks: int | None = None) -> PipelineResult:
     """O1 simple run: NO bar stage (reference quirk preserved)."""
-    t0 = time.time()
-    processed = build_processed(spark, cfg, max_ticks)
-    t1 = time.time()
-    processed.select(*TICK_CAPTURE_COLS).write.mode("overwrite").parquet(output_path)
-    t2 = time.time()
-    n = spark.read.parquet(output_path).count()
-    return PipelineResult(
-        ticks_processed=n, errors=0, elapsed_s=t2 - t0,
-        signal_stage_s=t1 - t0, sink_stage_s=t2 - t1,
-    )
+    return _run(spark, cfg, output_path, max_ticks, with_bars=False)
 
 
 def run_pipeline_managed(
@@ -78,21 +86,7 @@ def run_pipeline_managed(
     completion_callback=None,
 ) -> PipelineResult:
     """O2 managed run: bar stage + enrichment + metrics + callback."""
-    t0 = time.time()
-    processed = build_processed(spark, cfg, max_ticks)
-    if cfg.bar_processing.enabled:
-        bars = bar_aggregate(processed, cfg.bar_processing)
-        out = enrich_ticks_with_bars(processed, bars)
-    else:
-        out = processed
-    t1 = time.time()
-    out.write.mode("overwrite").parquet(output_path)
-    t2 = time.time()
-    n = spark.read.parquet(output_path).count()
-    result = PipelineResult(
-        ticks_processed=n, errors=0, elapsed_s=t2 - t0,
-        signal_stage_s=t1 - t0, sink_stage_s=t2 - t1,
-    )
+    result = _run(spark, cfg, output_path, max_ticks, with_bars=cfg.bar_processing.enabled)
     if completion_callback is not None:
         completion_callback(result)
     return result
