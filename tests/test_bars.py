@@ -149,11 +149,19 @@ def test_multistream_chunked_bars_equal_windowed(spark, method, tpb):
     """Per-stream chunked bar aggregation (windows keyed by
     (stream, chunk), per-stream offsets) must be BIT-identical to the
     per-stream windowed plan — unequal stream lengths, normalization
-    recalcs crossing chunk boundaries, both bar methods."""
+    recalcs crossing chunk boundaries, both bar methods. Seeded too:
+    continuing each stream from advance_streams'/advance_bars_streams'
+    seeds over its first lines, both plans equal the unsplit batch
+    plan's tail, with chunk boundaries falling inside the seeded span."""
     from tickdatapipeline_spark.config import BarProcessingConfig, SignalProcessingConfig
     from tickdatapipeline_spark.operators.bars import bar_aggregate
     from tickdatapipeline_spark.operators.expansion import expand_volume
     from tickdatapipeline_spark.operators.hotloop import hot_loop
+    from tickdatapipeline_spark.streaming.state import (
+        OUT_COLS,
+        advance_bars_streams,
+        advance_streams,
+    )
 
     rows = []
     for s, n in (("A", 53), ("B", 31)):
@@ -170,15 +178,31 @@ def test_multistream_chunked_bars_equal_windowed(spark, method, tpb):
     cfg = SignalProcessingConfig(encoder_type="derivative")
     bp = BarProcessingConfig(enabled=True, ticks_per_bar=tpb, bar_method=method,
                              normalization_window_bars=2)
-    ticks_w = hot_loop(expand_volume(raw, stream_id="stream"), cfg,
-                       stream_id="stream", stats_ticks_per_bar=8)
-    win = bar_aggregate(ticks_w, bp, stream_id="stream")
-    ticks_c = hot_loop(expand_volume(raw, stream_id="stream", chunk_size=9), cfg,
-                       stream_id="stream", stats_ticks_per_bar=8, chunk_size=9)
-    chk = bar_aggregate(ticks_c, bp, stream_id="stream", chunk_size=9)
-    a = win.orderBy("stream", "bar_idx").toPandas()
-    b = chk.select(*win.columns).orderBy("stream", "bar_idx").toPandas()
-    assert len(a) >= 10 and a.equals(b)
+
+    def plan(df, states=None, bar_states=None, chunk_size=None):
+        ticks = hot_loop(
+            expand_volume(df, stream_id="stream", chunk_size=chunk_size,
+                          seeds=states and {k: (st.prev_last, st.tick0) for k, st in states.items()}),
+            cfg, stream_id="stream", stats_ticks_per_bar=8, chunk_size=chunk_size,
+            seed=states and {k: st.hot for k, st in states.items()},
+        )
+        bars = bar_aggregate(ticks, bp, stream_id="stream", seed=bar_states,
+                             chunk_size=chunk_size)
+        return bars.orderBy("stream", "bar_idx").toPandas()
+
+    a = plan(raw)
+    assert len(a) >= 10 and a.equals(plan(raw, chunk_size=9)[list(a.columns)])
+    head, states = advance_streams(raw.where("line_no <= 7"), cfg, {}, "stream",
+                                   stats_ticks_per_bar=8)
+    head_bars, bar_states = advance_bars_streams(head.select("stream", *OUT_COLS), bp, {},
+                                                 "stream")
+    head_bars.unpersist()
+    head.unpersist()
+    rest = raw.where("line_no > 7")
+    tail = a[a.bar_idx > a.stream.map(lambda k: bar_states[k].bars_done0)].reset_index(drop=True)
+    assert len(tail) >= 8 and all(s.partial_cnt0 for s in bar_states.values())
+    assert plan(rest, states, bar_states).equals(tail)
+    assert plan(rest, states, bar_states, chunk_size=9).equals(tail)
 
 
 def test_vwap_bars_golden(spark):

@@ -252,7 +252,12 @@ def test_multistream_chunked_equals_windowed(spark, enc):
     """Per-stream chunking (windows partitioned by (stream, chunk) with
     per-stream broadcast offsets) must be BIT-identical to the per-stream
     windowed plan — for every encoder, with unequal stream lengths,
-    spikes, jumps and awkward chunk boundaries."""
+    spikes, jumps and awkward chunk boundaries. Seeded too: continuing
+    each stream from advance_streams' seeds over its first lines, both
+    plans equal the unsplit batch plan's tail, with chunk boundaries
+    falling inside the seeded span."""
+    from tickdatapipeline_spark.streaming.state import advance_streams
+
     cfg = SignalProcessingConfig(encoder_type=enc, tick_derivative_imag_scale=2.0,
                                  cpm_modulation_index=0.2)
     rows = []
@@ -272,10 +277,21 @@ def test_multistream_chunked_equals_windowed(spark, enc):
         "stream string, line_no long, ts_str string, bid long, ask long, "
         "last long, volume long",
     )
-    win = hot_loop(expand_volume(raw, stream_id="stream"), cfg,
-                   stream_id="stream", stats_ticks_per_bar=8)
-    chk = hot_loop(expand_volume(raw, stream_id="stream", chunk_size=9), cfg,
-                   stream_id="stream", stats_ticks_per_bar=8, chunk_size=9)
-    a = win.orderBy("stream", "tick_idx").toPandas()
-    b = chk.orderBy("stream", "tick_idx").select(list(a.columns)).toPandas()
-    assert a.equals(b)
+
+    def plan(df, states=None, chunk_size=None):
+        return hot_loop(
+            expand_volume(df, stream_id="stream", chunk_size=chunk_size,
+                          seeds=states and {k: (st.prev_last, st.tick0) for k, st in states.items()}),
+            cfg, stream_id="stream", stats_ticks_per_bar=8, chunk_size=chunk_size,
+            seed=states and {k: st.hot for k, st in states.items()},
+        ).orderBy("stream", "tick_idx").toPandas()
+
+    a = plan(raw)
+    assert a.equals(plan(raw, chunk_size=9)[list(a.columns)])
+    head, states = advance_streams(raw.where("line_no <= 6"), cfg, {}, "stream",
+                                   stats_ticks_per_bar=8)
+    head.unpersist()
+    rest = raw.where("line_no > 6")
+    tail = a[a.tick_idx > a.stream.map(lambda k: states[k].tick0)].reset_index(drop=True)
+    assert plan(rest, states).equals(tail)
+    assert plan(rest, states, chunk_size=9).equals(tail)

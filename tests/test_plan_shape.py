@@ -54,10 +54,48 @@ def test_runner_keyed_source_is_one_exchange_per_batch(spark, tmp_path):
     pipe = StreamingTickPipeline(
         spark, str(tmp_path), SignalProcessingConfig(), TripleSplitManager(),
         checkpoint_dir=str(tmp_path / "ckpt"), stream_key=lambda p: p.rsplit("-", 1)[-1])
-    one = exchanges(pipe._read_batch(spark.read.text(files[:1])))
-    three = exchanges(pipe._read_batch(spark.read.text(files)))
+    one = exchanges(pipe._read_batch(spark.read.text(files[:1]))[0])
+    three = exchanges(pipe._read_batch(spark.read.text(files))[0])
     assert len(one) == len(three) >= 1
     assert not any("SinglePartition" in ln for ln in one + three)
+
+
+def test_seeds_add_no_relation_or_broadcast(spark):
+    """A {stream_key: seed} map is an in-plan literal lookup on the key
+    column: the seeded keyed expansion, hot loop and bar plans scan as
+    many leaf relations and plan as many broadcasts as the unseeded ones
+    over the same input."""
+    from tickdatapipeline_spark.config import BarProcessingConfig, SignalProcessingConfig
+    from tickdatapipeline_spark.operators.bars import BarSeed, bar_aggregate
+    from tickdatapipeline_spark.operators.expansion import expand_volume
+    from tickdatapipeline_spark.operators.hotloop import HotLoopSeed, hot_loop
+
+    raw = spark.createDataFrame(
+        [(k, i + 1, "20250319 120000 0000000", 41969, 41971, 41970 + i, 1)
+         for k in ("A", "B") for i in range(6)],
+        "stream string, line_no long, ts_str string, bid long, ask long, last long, volume long")
+    cfg = SignalProcessingConfig(encoder_type="derivative")
+    bp = BarProcessingConfig(enabled=True, ticks_per_bar=4, bar_method="boxcar")
+    hot = {k: HotLoopSeed(n_valid0=5, core_seq0=4, sum_bmin0=-1, sum_bmax0=1, partial_cnt0=1,
+                          partial_min0=0, partial_max0=0, last_core_ratio0=0.5) for k in "AB"}
+    bar = {k: BarSeed(partial_cnt0=1, partial_open0=41970, partial_high0=41970,
+                      partial_low0=41970, bars_done0=1, prev_avg0=41970, sum_high0=41970,
+                      sum_low0=41970, norm0=2.0) for k in "AB"}
+    expanded = expand_volume(raw, "stream")
+    ticks = hot_loop(expanded, cfg, stream_id="stream")
+    plans = {
+        "expand_volume": (expanded, expand_volume(raw, "stream", seeds={k: (41970, 5) for k in "AB"})),
+        "hot_loop": (ticks, hot_loop(expanded, cfg, stream_id="stream", seed=hot)),
+        "bar_aggregate": (bar_aggregate(ticks, bp, stream_id="stream"),
+                          bar_aggregate(ticks, bp, stream_id="stream", seed=bar)),
+    }
+    for name, (cold, seeded) in plans.items():
+        counts = [
+            [physical(df).count(node) for node in ("Scan ExistingRDD", "LocalTableScan",
+                                                   "BroadcastExchange")]
+            for df in (cold, seeded)
+        ]
+        assert sum(counts[0][:2]) >= 1 and counts[0] == counts[1], (name, counts)
 
 
 def test_read_tick_file_keeps_one_single_partition_exchange(spark, tmp_path):

@@ -112,15 +112,19 @@ def test_runner_multifile_microbatch_single_stream(spark, tmp_path):
 
 def test_runner_multifile_microbatch_keyed(spark, tmp_path):
     """A keyed micro-batch holding two files of symA and one of symB,
-    then a batch of symB alone: per stream, the output equals that
-    stream's batch plan over the parsed lines, with one broadcast per
-    micro-batch. Blank and malformed lines are dropped as read_tick_file
-    drops them, and a file name that needs URI escaping is read once, in
-    the batch's own scan."""
-    rows_a, rows_b = tick_rows(20), ROWS_B
+    then a batch of symB alone, then symA resuming after sitting that
+    batch out: per stream, the output equals that stream's batch plan
+    over the parsed lines, with one broadcast per micro-batch. Blank and
+    malformed lines are dropped as read_tick_file drops them, and a file
+    name that needs URI escaping is read once, in the batch's own scan."""
+    rows_a, rows_b = tick_rows(28), ROWS_B
     write_files(tmp_path / "in", [("000-symA.txt", rows_a[:9], 0), ("001-symB.txt", rows_b[:7], 0),
-                                  ("002 t%41-symA.txt", rows_a[9:], 0),
-                                  ("003-symB.txt", rows_b[7:], 1)], junk=True)
+                                  ("002 t%41-symA.txt", rows_a[9:20], 0),
+                                  # three files fill the second batch with symB alone
+                                  ("003-symB.txt", rows_b[7:10], 1),
+                                  ("004-symB.txt", rows_b[10:13], 1),
+                                  ("005-symB.txt", rows_b[13:], 1),
+                                  ("006-symA.txt", rows_a[20:], 2)], junk=True)
     ticks, bars = [], []
     mgr = TripleSplitManager()
     mgr.subscribe("cap", ConsumerType.PRIORITY, lambda df, bid: ticks.extend(df.collect()))
@@ -128,8 +132,8 @@ def test_runner_multifile_microbatch_keyed(spark, tmp_path):
     pipe = run_pipe(spark, tmp_path, mgr, max_files_per_trigger=3, bar_cfg=BP, enrich=True,
                     stream_key=sym_key, bar_sink=lambda df, bid: bars.extend(df.collect()))
 
-    assert len(pipe.metrics.latencies_us) == 2
-    assert mgr.total_broadcasts == pipe.metrics.broadcasts_sent == 2
+    assert len(pipe.metrics.latencies_us) == 3
+    assert mgr.total_broadcasts == pipe.metrics.broadcasts_sent == 3
     assert persistent_rdds(spark) <= cached
     for key, rows in [("symA.txt", rows_a), ("symB.txt", rows_b)]:
         want_ticks, want_bars = batch_plan(spark, rows)

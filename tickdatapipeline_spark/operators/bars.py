@@ -26,7 +26,7 @@ The bars table is ~N x smaller than ticks; all bar windows run on it.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -34,6 +34,16 @@ from pyspark.sql import functions as F
 from tickdatapipeline_spark import constants as C
 from tickdatapipeline_spark.config import BarProcessingConfig
 from tickdatapipeline_spark.functions.fir import design_decimation_filter
+from tickdatapipeline_spark.operators.globalorder import (
+    GO_CHUNK,
+    add_chunk,
+    chunk_offsets_plan,
+    fixed_repartition,
+    pin,
+    running_last,
+    running_sum,
+    seed_columns,
+)
 
 
 @dataclass(frozen=True)
@@ -148,9 +158,7 @@ def _fir_averages(
             ),
         )
         src = src.withColumn("_fc", F.explode(chunk_seq))
-        n_shuffle = int(
-            src.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        src = src.repartition(n_shuffle, *(part + ["_fc"]))
+        src = fixed_repartition(src, part + ["_fc"])
         # in-chunk end positions: multiples of `step` within
         # [max(first_end, chunk start), min(last_end, chunk end)]
         lo = F.greatest(
@@ -180,27 +188,6 @@ def _fir_averages(
     )
 
 
-def _seed_table(ticks: DataFrame, seeds: dict, stream_id: str) -> DataFrame:
-    """Per-stream BarSeed scalars as a (tiny, broadcastable) DataFrame.
-    Explicit schema: optional fields may be all-None, which inference
-    cannot type; the key column matches the ticks' stream dtype."""
-    key_t = ticks.schema[stream_id].dataType.simpleString()
-    rows = [
-        (
-            k,
-            s.partial_cnt0, s.partial_open0, s.partial_high0, s.partial_low0,
-            s.bars_done0, s.prev_avg0, s.sum_high0, s.sum_low0, float(s.norm0),
-        )
-        for k, s in seeds.items()
-    ]
-    return ticks.sparkSession.createDataFrame(
-        rows,
-        f"{stream_id} {key_t}, _sd_pcnt long, _sd_popen long, _sd_phigh long, "
-        "_sd_plow long, _sd_bdone long, _sd_pavg long, _sd_shigh long, "
-        "_sd_slow long, _sd_norm double",
-    )
-
-
 def bar_aggregate(
     ticks: DataFrame,
     cfg: BarProcessingConfig,
@@ -215,30 +202,32 @@ def bar_aggregate(
     bar_sig_re, bar_sig_im, bar_normalization, bar_flags, bar_ticks,
     bar_volume, bar_end_timestamp, end_tick_idx. ``seed`` continues from
     a prior micro-batch: with ``stream_id``, a {stream_key: BarSeed}
-    mapping attached via a broadcast join of the (tiny) seed table,
-    mirroring the reference's per-stream BarProcessor state
-    (reference src/BarProcessor.jl:41-68); a single stream is the
-    one-key map. None == start of every stream (the seed columns are
-    then literals).
+    mapping read in-plan by a literal lookup on the stream key
+    (globalorder.seed_columns), mirroring the reference's per-stream
+    BarProcessor state (reference src/BarProcessor.jl:41-68); a single
+    stream is the one-key map. None == start of every stream (the seeds
+    are then literals).
 
-    ``chunk_size`` (unseeded batch, measured in TICKS like
-    hot_loop's): two-pass chunked global order over the bar frame — the
-    bar stream is ticks/n rows but still unbounded for a single 100 TB
-    stream, so B4's cumulative H/L sums, the norm carry-forward and
-    B5's prev-average lag each become chunk-local prefixes plus in-plan
-    broadcast offsets (operators/globalorder.py), and ``k`` (1-based
-    bars-completed) reduces to the row-local ``bar_id + 1`` —
-    bar ids are dense, the trailing-partial filter only ever drops the
-    last bar. Zero SinglePartition exchanges; bit-identical to the
-    windowed plan (tests/test_bars.py).
+    ``chunk_size`` (measured in TICKS like hot_loop's, seeded or not):
+    two-pass chunked global order over the bar frame — the bar stream
+    is ticks/n rows but still unbounded for a single 100 TB stream, so
+    B4's cumulative H/L sums, the norm carry-forward and B5's
+    prev-average lag each become chunk-local prefixes plus in-plan
+    broadcast offsets (operators/globalorder.py) plus the seed. Zero
+    SinglePartition exchanges; bit-identical to the windowed plan
+    (tests/test_bars.py).
     """
     if not cfg.enabled:
         raise ValueError("bar processing disabled in config")
     part = [stream_id] if stream_id else []
     n = cfg.ticks_per_bar
-    use_chunks = chunk_size is not None and seed is None
-    if seed is not None and not stream_id:
-        raise ValueError("per-stream seeds require stream_id")
+    use_chunks = chunk_size is not None
+    sd = seed_columns(seed, stream_id, BarSeed(),
+                      [f.name for f in fields(BarSeed) if f.name != "tail_prices0"])
+
+    def go(col: str) -> "str | None":
+        """A running quantity's chunk-offset column: chunked plans only."""
+        return col if use_chunks else None
 
     # DIV, not double '/'+cast: exact for any tick_idx (the double
     # quotient is only floor-exact below 2^53)
@@ -255,32 +244,13 @@ def bar_aggregate(
         F.count(F.lit(1)).alias("_cnt"),
     )
 
-    # Attach seed scalars as columns: start-of-stream literals without a
-    # seed, a broadcast-joined row per stream for the mapping. Everything
-    # downstream reads the _sd_* columns, so both share one plan.
-    if seed is not None:
-        sd = _seed_table(ticks, seed, stream_id)
-        bars = bars.join(F.broadcast(sd), on=part, how="left")
-    else:
-        s = BarSeed()
-        for name, val in [
-            ("_sd_pcnt", s.partial_cnt0), ("_sd_popen", s.partial_open0),
-            ("_sd_phigh", s.partial_high0), ("_sd_plow", s.partial_low0),
-            ("_sd_bdone", s.bars_done0), ("_sd_pavg", s.prev_avg0),
-            ("_sd_shigh", s.sum_high0), ("_sd_slow", s.sum_low0),
-        ]:
-            bars = bars.withColumn(name, F.lit(val).cast("long"))
-        bars = bars.withColumn("_sd_norm", F.lit(float(s.norm0)))
-
-    pcnt = F.coalesce(F.col("_sd_pcnt"), F.lit(0))
-    bdone = F.coalesce(F.col("_sd_bdone"), F.lit(0))
     # merge the carried unfinished OHLC bar into its batch remainder
-    is_pb = (pcnt > 0) & (F.col("bar_id") == bdone)
+    is_pb = (sd["partial_cnt0"] > 0) & (F.col("bar_id") == sd["bars_done0"])
     bars = (
-        bars.withColumn("bar_open_raw", F.when(is_pb, F.col("_sd_popen")).otherwise(F.col("bar_open_raw")))
-        .withColumn("bar_high_raw", F.when(is_pb, F.greatest("bar_high_raw", F.col("_sd_phigh"))).otherwise(F.col("bar_high_raw")))
-        .withColumn("bar_low_raw", F.when(is_pb, F.least("bar_low_raw", F.col("_sd_plow"))).otherwise(F.col("bar_low_raw")))
-        .withColumn("_cnt", F.when(is_pb, F.col("_cnt") + pcnt).otherwise(F.col("_cnt")))
+        bars.withColumn("bar_open_raw", F.when(is_pb, sd["partial_open0"]).otherwise(F.col("bar_open_raw")))
+        .withColumn("bar_high_raw", F.when(is_pb, F.greatest("bar_high_raw", sd["partial_high0"])).otherwise(F.col("bar_high_raw")))
+        .withColumn("bar_low_raw", F.when(is_pb, F.least("bar_low_raw", sd["partial_low0"])).otherwise(F.col("bar_low_raw")))
+        .withColumn("_cnt", F.when(is_pb, F.col("_cnt") + sd["partial_cnt0"]).otherwise(F.col("_cnt")))
     )
     bars = bars.where(F.col("_cnt") == n)  # partial trailing bar never completes
 
@@ -312,16 +282,15 @@ def bar_aggregate(
         )
 
     if use_chunks:
-        from tickdatapipeline_spark.operators.globalorder import (
-            GO_CHUNK,
-            add_chunk,
-            chunk_offsets_plan,
-            pin,
-        )
-
         bars = add_chunk(bars, "bar_id", max(chunk_size // n, 1))
         # shared by two offsets subplans and the main plan — pin once
         bars = pin(bars)
+        bars_off = chunk_offsets_plan(
+            bars,
+            sums={"_go_h0": F.col("bar_high_raw"), "_go_l0": F.col("bar_low_raw")},
+            keys=part,
+        )
+        bars = bars.join(F.broadcast(bars_off), on=part + [GO_CHUNK], how="left")
         wb = Window.partitionBy(*part, GO_CHUNK).orderBy("bar_id")
     else:
         wb = Window.partitionBy(*part).orderBy("bar_id")
@@ -329,31 +298,13 @@ def bar_aggregate(
 
     # B4: normalization recomputed every W bars from cumulative H/L sums
     # (BarProcessor.jl:247-270). bars_completed k is 1-based; a recompute
-    # happens AT bar k when k % W == 0 and uses stats through bar k.
-    if use_chunks:
-        # bar ids are dense (ticks are dense; the trailing-partial
-        # filter only drops the final bar) and the batch's first bar has
-        # bar_id == _sd_bdone, so row_number + _sd_bdone == bar_id + 1:
-        # k is row-local, no window needed
-        k = (F.col("bar_id") + 1).cast("long")
-        bars_off = chunk_offsets_plan(
-            bars,
-            sums={"_go_h0": F.col("bar_high_raw"), "_go_l0": F.col("bar_low_raw")},
-            keys=part,
-        )
-        bars = bars.join(F.broadcast(bars_off), on=part + [GO_CHUNK], how="left")
-        cum_high = (
-            F.sum("bar_high_raw").over(wcum) + F.coalesce("_go_h0", F.lit(0))
-            + F.coalesce(F.col("_sd_shigh"), F.lit(0))
-        ).cast("double")
-        cum_low = (
-            F.sum("bar_low_raw").over(wcum) + F.coalesce("_go_l0", F.lit(0))
-            + F.coalesce(F.col("_sd_slow"), F.lit(0))
-        ).cast("double")
-    else:
-        k = (F.row_number().over(wb) + F.coalesce(F.col("_sd_bdone"), F.lit(0))).cast("long")
-        cum_high = (F.sum("bar_high_raw").over(wcum) + F.coalesce(F.col("_sd_shigh"), F.lit(0))).cast("double")
-        cum_low = (F.sum("bar_low_raw").over(wcum) + F.coalesce(F.col("_sd_slow"), F.lit(0))).cast("double")
+    # happens AT bar k when k % W == 0 and uses stats through bar k. Bar
+    # ids are dense (ticks are dense; the trailing-partial filter only
+    # drops the final bar) and a batch's first bar is bars_done0, so k is
+    # the row-local bar_id + 1 — no window needed.
+    k = (F.col("bar_id") + 1).cast("long")
+    cum_high = running_sum(F.sum("bar_high_raw").over(wcum), go("_go_h0"), sd["sum_high0"]).cast("double")
+    cum_low = running_sum(F.sum("bar_low_raw").over(wcum), go("_go_l0"), sd["sum_low0"]).cast("double")
     bars = bars.withColumn("k", k)
     norm_at_k = F.greatest(cum_high / F.col("k").cast("double") - cum_low / F.col("k").cast("double"), F.lit(1.0))
     w_recalc = cfg.normalization_window_bars
@@ -373,28 +324,13 @@ def bar_aggregate(
             keys=part,
         )
         bars = bars.join(F.broadcast(carry_off), on=part + [GO_CHUNK], how="left")
-        bars = bars.withColumn(
-            "bar_normalization",
-            F.coalesce(
-                F.last("_norm_recalc", ignorenulls=True).over(wcum),
-                F.col("_go_nr"),     # last recalc in preceding chunks
-                F.col("_sd_norm"),   # carried recalc from the previous batch
-                F.lit(1.0),          # preload (BarProcessor.jl:126)
-            ),
-        )
-        prev_avg = F.coalesce(
-            F.lag("bar_average_raw").over(wb), F.col("_go_pavg"), F.col("_sd_pavg")
-        )
-    else:
-        bars = bars.withColumn(
-            "bar_normalization",
-            F.coalesce(
-                F.last("_norm_recalc", ignorenulls=True).over(wcum),
-                F.col("_sd_norm"),   # carried recalc from the previous batch
-                F.lit(1.0),          # preload (BarProcessor.jl:126)
-            ),
-        )
-        prev_avg = F.coalesce(F.lag("bar_average_raw").over(wb), F.col("_sd_pavg"))
+    # the last recalc, else the carried one, else the preload 1.0
+    # (BarProcessor.jl:126, BarSeed's default)
+    bars = bars.withColumn(
+        "bar_normalization",
+        running_last(F.last("_norm_recalc", ignorenulls=True).over(wcum), go("_go_nr"), sd["norm0"]),
+    )
+    prev_avg = running_last(F.lag("bar_average_raw").over(wb), go("_go_pavg"), sd["prev_avg0"])
 
     # B5: bar delta = avg_raw - prev avg_raw (UNclipped prev), first bar 0
     # (:272-291); jump guard + winsorize collapse to one clamp.

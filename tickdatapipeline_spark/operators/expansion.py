@@ -18,8 +18,23 @@ windows local to the partition, no single-partition shuffle.
 
 from __future__ import annotations
 
+from collections import namedtuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from tickdatapipeline_spark.operators.globalorder import (
+    GO_CHUNK,
+    add_chunk,
+    chunk_offsets_plan,
+    fixed_repartition,
+    running_last,
+    running_sum,
+    seed_columns,
+)
+
+# a stream's expansion seed: its previous batch's last price and ticks
+_XpSeed = namedtuple("_XpSeed", "prev_last tick0", defaults=(None, 0))
 
 
 def packed_timestamp(ts_col: Column) -> Column:
@@ -61,35 +76,6 @@ def unpacked_timestamp(packed: Column) -> Column:
     return F.concat(*chars)
 
 
-def _expand_rows(df: DataFrame, part: list[str], w_ticks, tick0_col,
-                 extra_cols: tuple = ()) -> DataFrame:
-    """Shared explode+delta+select of both expand_volume formulations —
-    the semantics live here ONCE; the two callers differ only in window
-    specs and how prev_last/tick0 are derived.
-
-    Expects ``prev_last`` already attached. volume < 1 must yield ZERO
-    replicas (Julia `for 1:0` is empty), but Spark's sequence(start,
-    stop) auto-steps -1 when stop < start — so gate it; explode(NULL)
-    emits no rows, matching generate_series(1,0). ``extra_cols`` leave
-    without their metadata: the source's dense-``line_no`` claim on the
-    chunk column does not hold for the replicas."""
-    seq = F.when(F.col("volume") >= 1, F.sequence(F.lit(1), F.col("volume")))
-    df = df.withColumn("replica_idx", F.explode(seq))
-    delta = (
-        F.when(F.col("prev_last").isNull(), F.lit(0))
-        .when(F.col("replica_idx") == 1, F.col("last") - F.col("prev_last"))
-        .otherwise(F.lit(0))
-    )
-    return df.select(
-        *part, "line_no", "replica_idx",
-        (F.row_number().over(w_ticks) + tick0_col).cast("long").alias("tick_idx"),
-        packed_timestamp(F.col("ts_str")).alias("timestamp"),
-        F.col("last").cast("long").alias("raw_price"),
-        delta.cast("long").alias("price_delta"),
-        *[F.col(c).alias(c, metadata={}) for c in extra_cols],
-    )
-
-
 def expand_volume(
     ticks_raw: DataFrame,
     stream_id: str | None = None,
@@ -107,18 +93,18 @@ def expand_volume(
     with ``stream_id``, ``seeds`` = {stream_key: (prev_last | None,
     tick0)} — the last price of the stream's previous batch (its first
     line's delta becomes last - prev_last instead of 0) and the ticks it
-    emitted so far (tick_idx stays dense across batches) — rides a
-    broadcast join of the (tiny) seed table. A single stream is the
-    one-key map. None == start of every stream.
+    emitted so far (tick_idx stays dense across batches) — read in-plan
+    by a literal lookup on the stream key (globalorder.seed_columns). A
+    single stream is the one-key map. None == start of every stream.
 
     ``chunk_size``: use the two-pass chunked formulation
     (operators/globalorder.py) — no SinglePartition window; with
     ``stream_id`` every chunk window and offsets prefix is per-stream.
-    Only seeded calls stay on the windowed path.
     The lag's cross-chunk patch is the previous chunk's final price; the
     tick numbering offset is the running sum of per-chunk expanded-row
-    counts (sum of volumes) — both in-plan broadcast subqueries. Output
-    additionally carries the chunk column for downstream reuse.
+    counts (sum of volumes) — both in-plan broadcast subqueries, added
+    to the seed like the window prefix. Output additionally carries the
+    chunk column for downstream reuse.
 
     ``valid_price_range`` (chunked path only): fused-offsets hand-off
     to the hot loop. Validity is a pure function of a line's price and
@@ -132,106 +118,76 @@ def expand_volume(
     offsets subquery + broadcast join. The caller owns the contract
     that the range equals the hot-loop config's (min_price, max_price).
     """
-    if chunk_size is not None and seeds is None:
-        return _expand_volume_chunked(
-            ticks_raw, chunk_size, stream_id=stream_id,
-            valid_price_range=valid_price_range,
-        )
     part = [stream_id] if stream_id else []
-    w_lines = Window.partitionBy(*part).orderBy("line_no")
-    w_ticks = Window.partitionBy(*part).orderBy("line_no", "replica_idx")
-
-    tick0_col = F.lit(0)
-    prev = F.lag("last").over(w_lines)
-    if seeds is not None:
-        if not stream_id:
-            raise ValueError("per-stream seeds require stream_id")
-        key_t = ticks_raw.schema[stream_id].dataType.simpleString()
-        sd = ticks_raw.sparkSession.createDataFrame(
-            [(k, pl, t0) for k, (pl, t0) in seeds.items()],
-            f"{stream_id} {key_t}, _xp_prev long, _xp_t0 long",
+    seed = seed_columns(seeds and {k: _XpSeed(*v) for k, v in seeds.items()},
+                        stream_id, _XpSeed(), ["prev_last", "tick0"])
+    use_chunks = chunk_size is not None
+    order = part + [GO_CHUNK] if use_chunks else part
+    extra_cols: tuple = ()
+    if use_chunks:
+        ticks_raw = add_chunk(ticks_raw, "line_no", chunk_size)
+        # density guard (r15): a source whose line numbering is the
+        # closed form over a claimed-dense key (ticks_from_events[_streams]
+        # with chunk_size) marks its chunk column with metadata; the
+        # offsets aggregate below already touches every line once per
+        # chunk, so the contiguity check rides it for free and raises
+        # loudly on a gapped/duplicated events table (see
+        # chunk_offsets_plan ``dense``).
+        dn_meta = ticks_raw.schema[GO_CHUNK].metadata
+        dense = (
+            (dn_meta["go_dense_order"], int(dn_meta["go_chunk_size"]))
+            if "go_dense_order" in dn_meta else None
         )
-        ticks_raw = ticks_raw.join(F.broadcast(sd), on=stream_id, how="left")
-        prev = F.coalesce(prev, F.col("_xp_prev"))
-        tick0_col = F.coalesce(F.col("_xp_t0"), F.lit(0))
-    df = ticks_raw.withColumn("prev_last", prev)
-    return _expand_rows(df, part, w_ticks, tick0_col)
+        # in-plan offsets: (final price of preceding chunks, expanded-row
+        # count of preceding chunks [, valid expanded-row count — the
+        # fused hot-loop offset, see the docstring])
+        sums = {"_go_t0": F.when(F.col("volume") >= 1, F.col("volume")).otherwise(F.lit(0))}
+        extra_cols = (GO_CHUNK,)
+        if valid_price_range is not None:
+            lo, hi = valid_price_range
+            sums["_go_v0"] = F.when(
+                (F.col("volume") >= 1)
+                & F.col("last").between(F.lit(int(lo)), F.lit(int(hi))),
+                F.col("volume"),
+            ).otherwise(F.lit(0))
+            extra_cols = (GO_CHUNK, "_go_v0")
+        chunk_offsets = chunk_offsets_plan(
+            ticks_raw, sums=sums,
+            carries={"_go_prev": (F.col("line_no"), F.col("last"))},
+            keys=part, dense=dense,
+        )
+        ticks_raw = fixed_repartition(
+            ticks_raw.join(F.broadcast(chunk_offsets), on=part + [GO_CHUNK], how="left"),
+            part + [GO_CHUNK],
+        )
+    w_lines = Window.partitionBy(*order).orderBy("line_no")
+    w_ticks = Window.partitionBy(*order).orderBy("line_no", "replica_idx")
 
+    # volume < 1 must yield ZERO replicas (Julia `for 1:0` is empty), but
+    # Spark's sequence(start, stop) auto-steps -1 when stop < start — so
+    # gate it; explode(NULL) emits no rows, matching generate_series(1,0)
+    seq = F.when(F.col("volume") >= 1, F.sequence(F.lit(1), F.col("volume")))
+    df = ticks_raw.withColumn("prev_last", F.lag("last").over(w_lines)).withColumn(
+        "replica_idx", F.explode(seq))
 
-def _expand_volume_chunked(
-    ticks_raw: DataFrame,
-    chunk_size: int,
-    *,
-    stream_id: str | None = None,
-    valid_price_range: "tuple[int, int] | None" = None,
-) -> DataFrame:
-    """Two-pass expand_volume (see expand_volume docstring). With
-    ``stream_id`` the chunk order — and every offsets prefix — is local
-    to the stream: windows partition by (stream, chunk)."""
-    from tickdatapipeline_spark.operators.globalorder import (
-        GO_CHUNK,
-        add_chunk,
-        chunk_offsets_plan,
+    def go(col: str) -> "str | None":
+        """A running quantity's chunk-offset column: chunked plans only."""
+        return col if use_chunks else None
+
+    prev = running_last(F.col("prev_last"), go("_go_prev"), seed["prev_last"])
+    delta = (
+        F.when(prev.isNull(), F.lit(0))
+        .when(F.col("replica_idx") == 1, F.col("last") - prev)
+        .otherwise(F.lit(0))
     )
-
-    part = [stream_id] if stream_id else []
-    lines = add_chunk(ticks_raw, "line_no", chunk_size)
-    # density guard (r15): a source whose line numbering is the closed
-    # form over a claimed-dense key (ticks_from_events[_streams] with
-    # chunk_size) marks its chunk column with metadata; the offsets
-    # aggregate below already touches every line once per chunk, so the
-    # contiguity check rides it for free and raises loudly on a gapped/
-    # duplicated events table (see chunk_offsets_plan ``dense``).
-    dn_meta = (ticks_raw.schema[GO_CHUNK].metadata
-               if GO_CHUNK in ticks_raw.columns else {})
-    dense = (
-        (dn_meta["go_dense_order"], int(dn_meta["go_chunk_size"]))
-        if "go_dense_order" in dn_meta else None
+    tick_idx = running_sum(F.row_number().over(w_ticks), go("_go_t0"), seed["tick0"])
+    return df.select(
+        *part, "line_no", "replica_idx",
+        tick_idx.cast("long").alias("tick_idx"),
+        packed_timestamp(F.col("ts_str")).alias("timestamp"),
+        F.col("last").cast("long").alias("raw_price"),
+        delta.cast("long").alias("price_delta"),
+        # the chunk column leaves without its metadata: the source's
+        # dense-``line_no`` claim does not hold for the replicas
+        *[F.col(c).alias(c, metadata={}) for c in extra_cols],
     )
-    # in-plan offsets: (final price of preceding chunks, expanded-row
-    # count of preceding chunks [, valid expanded-row count — the fused
-    # hot-loop offset, see expand_volume docstring])
-    sums = {
-        "_go_t0": F.when(
-            F.col("volume") >= 1, F.col("volume")
-        ).otherwise(F.lit(0))
-    }
-    extra_cols: tuple = (GO_CHUNK,)
-    if valid_price_range is not None:
-        lo, hi = valid_price_range
-        sums["_go_v0"] = F.when(
-            (F.col("volume") >= 1)
-            & F.col("last").between(F.lit(int(lo)), F.lit(int(hi))),
-            F.col("volume"),
-        ).otherwise(F.lit(0))
-        extra_cols = (GO_CHUNK, "_go_v0")
-    chunk_offsets = chunk_offsets_plan(
-        lines,
-        sums=sums,
-        carries={"_go_prev": (F.col("line_no"), F.col("last"))},
-        keys=part,
-        dense=dense,
-    )
-    df = lines.join(F.broadcast(chunk_offsets), on=part + [GO_CHUNK], how="left")
-
-    # EXPLICIT exchange for the window chain, with a pinned partition
-    # count (r14, guide §2.5 input skew / §1.2): the implicit
-    # ENSURE_REQUIREMENTS exchange here is byte-coalesced by AQE, and
-    # the line frame is narrow — at sf0.1 AQE squeezed it to TWO
-    # partitions, serializing every downstream stage (the explode
-    # multiplies rows ~10x and the whole chunk-keyed hot loop inherits
-    # this partitioning, so the per-byte estimate undercounts the
-    # per-ROW compute by an order of magnitude). An explicit
-    # repartition(n, keys) is AQE-coalesce-exempt; n is the session's
-    # shuffle parallelism (scale-adaptive: deployments size
-    # spark.sql.shuffle.partitions to the cluster), and the exchange
-    # still moves LINES, never the exploded replicas.
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    df = df.repartition(n_shuffle, *(part + [GO_CHUNK]))
-
-    w_lines = Window.partitionBy(*part, GO_CHUNK).orderBy("line_no")
-    w_ticks = Window.partitionBy(*part, GO_CHUNK).orderBy("line_no", "replica_idx")
-    prev = F.coalesce(F.lag("last").over(w_lines), F.col("_go_prev"))
-    df = df.withColumn("prev_last", prev)
-    tick0_col = F.coalesce("_go_t0", F.lit(0))
-    return _expand_rows(df, part, w_ticks, tick0_col, extra_cols=extra_cols)

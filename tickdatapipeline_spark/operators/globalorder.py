@@ -111,6 +111,65 @@ def pin(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
 
 
+def seed_columns(seeds: "dict | None", key: "str | None", default,
+                 fields: "list[str]") -> "dict[str, Column]":
+    """A per-stream seed as in-plan Columns: ``field`` -> the row's
+    stream's ``getattr(seed, field)``, for the {stream_key: seed} map
+    ``seeds``. A seed is the offset every running quantity starts from,
+    so it joins nothing: each field is one literal ``create_map`` lookup
+    on the ``key`` column, the same in-plan lookup the runner uses for
+    file -> stream key. A key absent from the map reads NULL
+    (``map[col]`` is not ANSI-strict) and falls back to ``default``'s
+    field, the start of a stream. No seeds (None or {}) gives
+    ``default``'s fields as plain literals, so the batch plan has no
+    lookup. The lookup scans the map per row: pass only the streams the
+    batch holds (the runner does)."""
+    if not seeds:
+        return {f: F.lit(getattr(default, f)) if getattr(default, f) is not None
+                else F.lit(None).cast("long") for f in fields}
+    if not key:
+        raise ValueError("per-stream seeds require stream_id")
+    cols = {}
+    for f in fields:
+        d = getattr(default, f)
+        t = "double" if isinstance(d, float) else "long"
+        lookup = F.create_map(*[x for k, s in seeds.items()
+                                for x in (F.lit(k), F.lit(getattr(s, f)).cast(t))])[F.col(key)]
+        cols[f] = lookup if d is None else F.coalesce(lookup, F.lit(d))
+    return cols
+
+
+def running_sum(prefix: Column, offset: "str | None", seed: Column) -> Column:
+    """A running sum: the window ``prefix``, plus the per-chunk offsets
+    column ``offset`` (chunked plans; None on the windowed path), plus
+    the ``seed`` (seed_columns)."""
+    if offset is not None:
+        prefix = prefix + F.coalesce(offset, F.lit(0))
+    return prefix + seed
+
+
+def running_last(prefix: Column, offset: "str | None", seed: Column) -> Column:
+    """A carried value: the window's ``prefix`` (last/lag), else the
+    preceding chunks' carry ``offset`` (chunked plans), else the seed."""
+    return F.coalesce(prefix, *([F.col(offset)] if offset else []), seed)
+
+
+def fixed_repartition(df: DataFrame, cols: "list[str]") -> DataFrame:
+    """Hash-repartition ``df`` on ``cols`` into the session's shuffle
+    parallelism, as an EXPLICIT exchange (r14, guide §2.5 input skew /
+    §1.2). The implicit ENSURE_REQUIREMENTS exchange a window or
+    aggregate would plan is byte-coalesced by AQE, and the frames
+    repartitioned here are narrow rows about to multiply (volume
+    expansion's lines, the FIR scatter's ticks): at sf0.1 AQE squeezed
+    the line frame to TWO partitions, serializing every downstream
+    stage, because the per-byte estimate undercounts the per-ROW
+    compute by an order of magnitude. An explicit repartition(n, keys)
+    is AQE-coalesce-exempt; n = spark.sql.shuffle.partitions stays
+    scale-adaptive (deployments size it to the cluster)."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *cols)
+
+
 def add_chunk(df: DataFrame, key_expr: str, chunk_size: int) -> DataFrame:
     """Attach the monotone chunk id ``(key_expr) DIV chunk_size``.
 

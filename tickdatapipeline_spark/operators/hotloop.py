@@ -32,13 +32,22 @@ is the per-bar groupBy (144x reduction) whose result is broadcast back.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tickdatapipeline_spark import constants as C
 from tickdatapipeline_spark.config import SignalProcessingConfig
+from tickdatapipeline_spark.operators.globalorder import (
+    GO_CHUNK,
+    add_chunk,
+    chunk_offsets_plan,
+    pin,
+    running_last,
+    running_sum,
+    seed_columns,
+)
 
 
 @dataclass(frozen=True)
@@ -97,94 +106,42 @@ def hot_loop(
     [+ internals when keep_internals, among them the running columns
     the next HotLoopSeed is read from]. ``seed`` continues from a prior
     micro-batch (see HotLoopSeed): with ``stream_id``, a {stream_key:
-    HotLoopSeed} mapping attached via a broadcast join of the (tiny) seed
-    table, mirroring the reference's one-TickHotLoopState-per-stream
-    model; a single stream is the one-key map. None == start of every
-    stream (the seed columns are then literals).
+    HotLoopSeed} mapping read in-plan by a literal lookup on the stream
+    key (globalorder.seed_columns), mirroring the reference's
+    one-TickHotLoopState-per-stream model; a single stream is the
+    one-key map. None == start of every stream (the seeds are then
+    literals).
 
     ``chunk_size``: two-pass chunked global order — every running
     quantity becomes a chunk-local window prefix plus a broadcast
-    per-chunk offset (operators/globalorder.py), removing the
-    SinglePartition exchange. Applies to the single-stream batch plan
-    AND, with ``stream_id``, to multistream batches whose individual
-    streams are long (windows then partition by (stream, chunk));
-    a seed disables it (seeded calls stay on the windowed path). The
-    cumulative-valid offsets are an in-plan broadcast subquery; core_seq
-    then needs NO second pass — it is the row-local function valid_cum -
-    1[a first-valid row seen], because exactly one valid row per cold
-    stream is non-core. Bit-identical to the windowed plan (pinned by
-    tests).
+    per-chunk offset (operators/globalorder.py) plus the seed, removing
+    the SinglePartition exchange. Applies to the single-stream batch
+    plan AND, with ``stream_id``, to multistream batches whose
+    individual streams are long (windows then partition by (stream,
+    chunk)), seeded or not. The cumulative-valid offsets are an in-plan
+    broadcast subquery; core_seq then needs NO second pass — it is the
+    row-local function valid_cum - 1[a first-valid row seen], because
+    exactly one valid row per cold stream is non-core. Bit-identical to
+    the windowed plan (pinned by tests).
     """
-    # chunked two-pass applies to the single-stream batch plan AND, with
-    # stream_id, to multistream batches whose INDIVIDUAL streams are long
-    # (windows partition by (stream, chunk); every offsets subquery is
-    # per-stream). Seeded calls stay on the windowed path.
-    use_chunks = chunk_size is not None and seed is None
+    use_chunks = chunk_size is not None
     part = [stream_id] if stream_id else []
     if use_chunks:
-        from tickdatapipeline_spark.operators.globalorder import (
-            GO_CHUNK,
-            add_chunk,
-            chunk_offsets_plan,
-            pin,
-        )
-
         expanded = add_chunk(expanded, "tick_idx - 1", chunk_size)
         w = Window.partitionBy(*part, GO_CHUNK).orderBy("tick_idx")
     else:
         w = Window.partitionBy(*part).orderBy("tick_idx")
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
 
-    # Seed scalars become _hs_* columns: start-of-stream literals without
-    # a seed, a broadcast-joined row per stream for a {key: HotLoopSeed}
-    # mapping (mirrors bar_aggregate's per-stream BarSeed; reference
-    # keeps one TickHotLoopState per stream). Downstream reads only the
-    # columns, so both paths share one plan.
-    _HS_FIELDS = [
-        ("_hs_nvalid", "n_valid0", "long", 0),
-        ("_hs_cseq", "core_seq0", "long", 0),
-        ("_hs_sbmin", "sum_bmin0", "long", 0),
-        ("_hs_sbmax", "sum_bmax0", "long", 0),
-        ("_hs_pcnt", "partial_cnt0", "long", 0),
-        ("_hs_pmin", "partial_min0", "long", None),
-        ("_hs_pmax", "partial_max0", "long", None),
-        ("_hs_inv", "inv_q16_0", "long", C.PRELOAD_INV_NORM_Q16),
-        ("_hs_theta", "cpm_theta0", "long", 0),
-        ("_hs_amcn", "amc_n0", "long", 0),
-        ("_hs_lratio", "last_core_ratio0", "double", 0.0),
-    ]
+    def go(col: str) -> "str | None":
+        """A running quantity's chunk-offset column: chunked plans only."""
+        return col if use_chunks else None
 
-    if seed is not None:
-        if not stream_id:
-            raise ValueError("per-stream seeds require stream_id")
-        key_t = expanded.schema[stream_id].dataType.simpleString()
-        schema = f"{stream_id} {key_t}, " + ", ".join(
-            f"{c} {t}" for c, _a, t, _d in _HS_FIELDS
-        )
-        seed_tbl = F.broadcast(expanded.sparkSession.createDataFrame(
-            [tuple([k] + [getattr(sk, a) for _c, a, _t, _d in _HS_FIELDS])
-             for k, sk in seed.items()],
-            schema,
-        ))
-
-        def _with_seed_cols(frame: DataFrame) -> DataFrame:
-            return frame.join(seed_tbl, on=part, how="left")
-    else:
-        s = HotLoopSeed()
-
-        def _with_seed_cols(frame: DataFrame) -> DataFrame:
-            for c, a, t, _d in _HS_FIELDS:
-                frame = frame.withColumn(c, F.lit(getattr(s, a)).cast(t))
-            return frame
-
-    def _hs(col: str) -> F.Column:
-        default = next(d for c, _a, _t, d in _HS_FIELDS if c == col)
-        if default is None:
-            return F.col(col)
-        return F.coalesce(F.col(col), F.lit(default))
-
-    df = _with_seed_cols(expanded)
-    df = df.withColumn(
+    # each running quantity = window prefix [+ chunk offset] + seed; the
+    # seed is an in-plan lookup on the stream key (literals unseeded),
+    # mirroring the reference's one TickHotLoopState per stream
+    hs = seed_columns(seed, stream_id, HotLoopSeed(), [f.name for f in fields(HotLoopSeed)])
+    df = expanded.withColumn(
         "is_valid", F.col("raw_price").between(cfg.min_price, cfg.max_price)
     )
     if use_chunks:
@@ -200,17 +157,8 @@ def hot_loop(
                 keys=part,
             )
             df = df.join(F.broadcast(valid_offsets), on=part + [GO_CHUNK], how="left")
-        batch_valid_cum = (
-            F.count(F.when(F.col("is_valid"), 1)).over(wcum)
-            + F.coalesce("_go_v0", F.lit(0))
-        )
-        df = df.withColumn("_go_bvc", batch_valid_cum)
-        df = df.withColumn("n_valid_upto", F.col("_go_bvc") + _hs("_hs_nvalid"))
-    else:
-        df = df.withColumn(
-            "n_valid_upto",
-            F.count(F.when(F.col("is_valid"), 1)).over(wcum) + _hs("_hs_nvalid"),
-        )
+    df = df.withColumn("n_valid_upto", running_sum(
+        F.count(F.when(F.col("is_valid"), 1)).over(wcum), go("_go_v0"), hs["n_valid0"]))
     is_core = F.col("is_valid") & (F.col("n_valid_upto") >= 2)
     # (the 'first' leg of the taxonomy needs no own column: it is the
     # valid-but-not-core row, handled implicitly by is_core/is_hold)
@@ -230,32 +178,21 @@ def hot_loop(
         "clipped", F.col("is_core") & (F.abs(F.col("price_delta")) > eff)
     )
 
-    # Bar position over core (accepted) ticks only (:377-381).
-    if use_chunks:
-        # row-local: valid rows are all core except the single `first`
-        # row every (unseeded, so cold) stream has — no second pass
-        first_corr = F.when(F.col("_go_bvc") >= 1, F.lit(1)).otherwise(F.lit(0))
-        df = df.withColumn(
-            "core_seq", F.col("_go_bvc") - first_corr + _hs("_hs_cseq")
-        )
-    else:
-        # row-local, NO second serial window pass (the same identity
-        # the chunked path derives): every batch valid row is core
-        # except the single `first` row a cold stream has, so the
-        # cumulative core count is the cumulative valid count minus
-        # that one row. Expressed on the seed COLUMNS so the per-stream
-        # dict path (n_valid0 varying by stream) corrects per row.
-        # Bit-identity with the count-window form is pinned by the
-        # windowed==chunked and golden suites; measured r14 (alternating
-        # same-session A/B, min of 4): trio total 10.8 -> 9.3 s.
-        first_corr = F.when(
-            (_hs("_hs_nvalid") == 0) & (F.col("n_valid_upto") >= 1), F.lit(1)
-        ).otherwise(F.lit(0))
-        df = df.withColumn(
-            "core_seq",
-            F.col("n_valid_upto") - _hs("_hs_nvalid") - first_corr
-            + _hs("_hs_cseq"),
-        )
+    # Bar position over core (accepted) ticks only (:377-381). Row-local,
+    # NO second serial window pass: every valid row is core except the
+    # single `first` row a cold stream has, so the cumulative core count
+    # is the cumulative valid count minus that one row — corrected per
+    # row on the seed (n_valid0 varies by stream). Bit-identity with the
+    # count-window form is pinned by the windowed==chunked and golden
+    # suites; measured r14 (alternating same-session A/B, min of 4): trio
+    # total 10.8 -> 9.3 s.
+    first_corr = F.when(
+        (hs["n_valid0"] == 0) & (F.col("n_valid_upto") >= 1), F.lit(1)
+    ).otherwise(F.lit(0))
+    df = df.withColumn(
+        "core_seq",
+        F.col("n_valid_upto") - hs["n_valid0"] - first_corr + hs["core_seq0"],
+    )
     n = stats_ticks_per_bar
     df = df.withColumn(
         "bars_done", F.when(F.col("is_core"), F.expr(f"core_seq DIV {n}"))
@@ -281,23 +218,16 @@ def hot_loop(
         F.min("delta_w").alias("bmin"),
         F.max("delta_w").alias("bmax"),
         F.count(F.lit(1)).alias("cnt"),
-        # seed scalars are constant per stream — carry them through
-        *[F.min(c).alias(c) for c, _a, _t, _d in _HS_FIELDS],
     )
-    # merge the carried unfinished stats bar into its batch remainder;
+    # merge the carried unfinished stats bar (the one that began before
+    # this batch's first core tick) into its batch remainder;
     # least/greatest skip NULL partial min/max for streams with no carry
-    is_pb = (_hs("_hs_pcnt") > 0) & (
-        F.col("bar_ord") == F.expr(f"coalesce(_hs_cseq, 0) DIV {n}")
-    )
-    bars = bars.withColumn(
-        "bmin",
-        F.when(is_pb, F.least(F.col("bmin"), F.col("_hs_pmin"))).otherwise(F.col("bmin")),
-    ).withColumn(
-        "bmax",
-        F.when(is_pb, F.greatest(F.col("bmax"), F.col("_hs_pmax"))).otherwise(F.col("bmax")),
-    ).withColumn(
-        "cnt",
-        F.when(is_pb, F.col("cnt") + _hs("_hs_pcnt")).otherwise(F.col("cnt")),
+    is_pb = (hs["partial_cnt0"] > 0) & (F.col("bar_ord") * n < hs["core_seq0"])
+    bars = bars.select(
+        *part, "bar_ord",
+        F.when(is_pb, F.least("bmin", hs["partial_min0"])).otherwise(F.col("bmin")).alias("bmin"),
+        F.when(is_pb, F.greatest("bmax", hs["partial_max0"])).otherwise(F.col("bmax")).alias("bmax"),
+        F.when(is_pb, F.col("cnt") + hs["partial_cnt0"]).otherwise(F.col("cnt")).alias("cnt"),
     )
     bars = bars.where(F.col("cnt") == n)
     if use_chunks:
@@ -311,19 +241,13 @@ def hot_loop(
             keys=part,
         )
         bars = bars.join(F.broadcast(bar_offs), on=part + [GO_CHUNK], how="left")
-        wb = (
-            Window.partitionBy(*part, GO_CHUNK).orderBy("bar_ord")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        cum_bmin = F.sum("bmin").over(wb) + F.coalesce("_go_bmin0", F.lit(0))
-        cum_bmax = F.sum("bmax").over(wb) + F.coalesce("_go_bmax0", F.lit(0))
+        wb = Window.partitionBy(*part, GO_CHUNK).orderBy("bar_ord")
     else:
-        wb = Window.partitionBy(*part).orderBy("bar_ord").rowsBetween(Window.unboundedPreceding, 0)
-        cum_bmin = F.sum("bmin").over(wb)
-        cum_bmax = F.sum("bmax").over(wb)
+        wb = Window.partitionBy(*part).orderBy("bar_ord")
+    wb = wb.rowsBetween(Window.unboundedPreceding, 0)
     k = (F.col("bar_ord") + 1).cast("double")
-    sum_bmin = cum_bmin + _hs("_hs_sbmin")
-    sum_bmax = cum_bmax + _hs("_hs_sbmax")
+    sum_bmin = running_sum(F.sum("bmin").over(wb), go("_go_bmin0"), hs["sum_bmin0"])
+    sum_bmax = running_sum(F.sum("bmax").over(wb), go("_go_bmax0"), hs["sum_bmax0"])
     norm = F.greatest(
         sum_bmax.cast("double") / k - sum_bmin.cast("double") / k, F.lit(1.0)
     )
@@ -349,7 +273,7 @@ def hot_loop(
     join_keys = part + ["bars_done"]
     df = df.join(norms, on=join_keys, how="left")
     inv = F.when(
-        F.col("is_core"), F.coalesce(F.col("inv_q16"), _hs("_hs_inv"))
+        F.col("is_core"), F.coalesce(F.col("inv_q16"), hs["inv_q16_0"])
     )
     df = df.withColumn("inv_q16", inv)
 
@@ -407,9 +331,7 @@ def hot_loop(
                 keys=part,
             )
             df = df.join(F.broadcast(off2), on=part + [GO_CHUNK], how="left")
-            prev = F.coalesce(local_prev, F.col("_go_lr"), _hs("_hs_lratio"))
-        else:
-            prev = F.coalesce(local_prev, _hs("_hs_lratio"))
+        prev = running_last(local_prev, go("_go_lr"), hs["last_core_ratio0"])
         sig_re = F.when(F.col("is_core"), F.col("ratio")).otherwise(F.lit(0.0))
         sig_im = F.when(
             F.col("is_core"),
@@ -434,19 +356,14 @@ def hot_loop(
             # safe for chunk_size <= 2^27 — which plans/common caps.
             # The chunked form therefore stays exact at stream lengths
             # where a single running int64 sum would overflow.
-            df = df.withColumn("_go_dp", dp)
             off2 = chunk_offsets_plan(
-                df, sums={"_go_th0": F.col("_go_dp")}, mods={"_go_th0": C.Q32_MOD},
-                keys=part,
+                df, sums={"_go_th0": dp}, mods={"_go_th0": C.Q32_MOD}, keys=part,
             )
             df = df.join(F.broadcast(off2), on=part + [GO_CHUNK], how="left")
-            theta = F.pmod(
-                F.sum("_go_dp").over(wcum)
-                + F.coalesce("_go_th0", F.lit(0)) + _hs("_hs_theta"),
-                F.lit(C.Q32_MOD),
-            )
-        else:
-            theta = F.pmod(F.sum(dp).over(wcum) + _hs("_hs_theta"), F.lit(C.Q32_MOD))
+        theta = F.pmod(
+            running_sum(F.sum(dp).over(wcum), go("_go_th0"), hs["cpm_theta0"]),
+            F.lit(C.Q32_MOD),
+        )
         idx = (theta / F.lit(2**C.CPM_INDEX_SHIFT)).cast("long")  # top 10 bits (:173-176)
         lre, lim = _lut_trig(idx)
         sig_re = F.when(invoked, lre).otherwise(F.lit(0.0))
@@ -463,12 +380,7 @@ def hot_loop(
                 df, sums={"_go_n0": F.when(invoked, 1).otherwise(0)}, keys=part,
             )
             df = df.join(F.broadcast(off2), on=part + [GO_CHUNK], how="left")
-            amc_n = (
-                F.count(F.when(invoked, 1)).over(wcum)
-                + F.coalesce("_go_n0", F.lit(0)) + _hs("_hs_amcn")
-            )
-        else:
-            amc_n = F.count(F.when(invoked, 1)).over(wcum) + _hs("_hs_amcn")
+        amc_n = running_sum(F.count(F.when(invoked, 1)).over(wcum), go("_go_n0"), hs["amc_n0"])
         # reduce mod 16 before the multiply: INCR*16 == 2^32 exactly, so
         # theta depends only on amc_n mod 16 — and amc_n * INCR would
         # overflow int64 past 2^35 rows
@@ -501,8 +413,8 @@ def hot_loop(
                      "n_valid_upto", "sum_bmin_upto", "sum_bmax_upto",
                      # delta_w merged with the carried stats bar: the
                      # row-level twin of the bars' is_pb merge
-                     F.when(is_pb, F.least("delta_w", "_hs_pmin")).otherwise(F.col("delta_w")).alias("bar_dmin"),
-                     F.when(is_pb, F.greatest("delta_w", "_hs_pmax")).otherwise(F.col("delta_w")).alias("bar_dmax")]
+                     F.when(is_pb, F.least("delta_w", hs["partial_min0"])).otherwise(F.col("delta_w")).alias("bar_dmin"),
+                     F.when(is_pb, F.greatest("delta_w", hs["partial_max0"])).otherwise(F.col("delta_w")).alias("bar_dmax")]
         if enc == "cpm":
             out_cols += ["cpm_theta"]
     return df.select(*out_cols)

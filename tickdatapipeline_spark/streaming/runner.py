@@ -112,29 +112,34 @@ class StreamingTickPipeline:
         self.metrics = PipelineMetrics()  # O2 accumulator, one obs/batch
         self._query = None
 
-    def _read_batch(self, batch_df: DataFrame) -> DataFrame | None:
+    def _read_batch(self, batch_df: DataFrame) -> tuple[DataFrame | None, set]:
         """The batch's files as one keyed ticks_raw frame (None if the
-        batch holds no line), parsed in the batch's own scan. Each line
-        is tagged with its file's stream key through a literal map over
-        the batch's file names, and line_no numbers each stream by (file
-        name, line): one exchange, however many files the batch holds."""
+        batch holds no line) and the set of their stream keys, parsed in
+        the batch's own scan. Each line is tagged with its file's stream
+        key through a literal map over the batch's file names, and
+        line_no numbers each stream by (file name, line): one exchange,
+        however many files the batch holds."""
         files = [r[0] for r in batch_df.select(F.input_file_name()).distinct().collect()]
         if not files:
-            return None
+            return None, set()
         key = self.stream_key or (lambda _path: ONE_KEY)
         lookup = F.create_map(*[F.lit(x) for f in files for x in (f, key(f))])
         lines = batch_df.withColumn("_file", F.input_file_name())
         return _parse_tick_lines(
             lines.withColumn(KEY, lookup[F.col("_file")]), [KEY], ["_file"]
-        )
+        ), {key(f) for f in files}
 
     # -- one micro-batch: keyed read -> seeded ops -> one broadcast -------
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self._last_batch_id:
             return  # replayed batch: state already reflects it
         batch_t0 = time.perf_counter()
-        raw = self._read_batch(batch_df)
-        states, bar_states = self.states, self.bar_states
+        raw, keys = self._read_batch(batch_df)
+        # only the batch's streams: the operators look seeds up in a
+        # literal map whose cost grows with its size, and self.states
+        # keeps every stream ever seen (e.g. one per day file)
+        states, bar_states = ({k: m[k] for k in keys if k in m}
+                              for m in (self.states, self.bar_states))
         signal_us = broadcast_us = broadcasts = errors = 0
         processed = bars = None
         try:
@@ -161,8 +166,9 @@ class StreamingTickPipeline:
                 if df is not None:
                     df.unpersist()
         ticks_before = self.ticks_processed
-        self.states, self.bar_states = states, bar_states
-        self.ticks_processed = sum(s.tick0 for s in states.values())
+        self.states = {**self.states, **states}
+        self.bar_states = {**self.bar_states, **bar_states}
+        self.ticks_processed = sum(s.tick0 for s in self.states.values())
         self.metrics.record_batch(
             ticks=self.ticks_processed - ticks_before,
             total_us=int((time.perf_counter() - batch_t0) * 1e6),

@@ -17,11 +17,15 @@ seed; the cached frames they return keep that column.
 Streaming output over any batch split is bit-identical to the batch
 plan over the concatenated input (tested in tests/test_streaming.py).
 
-Scale: state is O(1) per stream (a dozen scalars). Seeds ride broadcast
-joins keyed by stream. Each stage reads its next seeds with ONE action,
-a grouped aggregate collecting O(streams) rows, however many streams or
-files the batch carries; no growing state store, no shuffling of
-history.
+Scale: state is O(1) per stream (a dozen scalars). A seed is the offset
+each running quantity starts from, read in-plan by a literal map lookup
+on the stream key (operators/globalorder.seed_columns): no seed table,
+join or broadcast. The lookup costs time linear in the map's size, so
+the runner passes only the batch's streams, bounded by the batch's
+files like its file -> key map. Each stage reads its next seeds with ONE
+action, a grouped aggregate collecting O(streams) rows, however many
+streams or files the batch carries; no growing state store, no
+shuffling of history.
 """
 
 from __future__ import annotations
@@ -179,7 +183,7 @@ def advance_streams(
     absent from the batch keeps its state. Mirrors the reference's
     one-TickHotLoopState-per-stream model without a per-stream driver
     loop: expansion and hot loop run ONCE over the whole batch with
-    per-stream seeds broadcast-joined in, and the next seeds are the
+    per-stream seeds looked up in-plan, and the next seeds are the
     running columns of each stream's last (core) row, read by one
     grouped aggregate collecting O(streams) rows (see HotLoopSeed).
     """
