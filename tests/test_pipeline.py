@@ -60,6 +60,36 @@ def test_run_pipeline_managed_with_bars_and_callback(spark, tmp_path):
     assert enriched.count() == df.count() // 5  # one completing tick per bar
 
 
+def test_write_counts_rows_without_reading_output(spark, tmp_path, monkeypatch):
+    """run_pipeline and capture count the rows they write from the write
+    itself: with every parquet/load read failing, they still return the
+    right counts (an empty write included)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from tickdatapipeline_spark.operators.expansion import expand_volume
+    from tickdatapipeline_spark.operators.hotloop import hot_loop
+    from tickdatapipeline_spark.sources.tickfile import read_tick_file
+
+    path = write_tick_file(tmp_path / "ticks.txt")
+    cfg = PipelineConfig(
+        tick_file_path=path,
+        signal_processing=SignalProcessingConfig(encoder_type="derivative"),
+        bar_processing=BarProcessingConfig(enabled=False),
+    )
+    processed = hot_loop(expand_volume(read_tick_file(spark, path)), cfg.signal_processing)
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("output re-read")
+
+    monkeypatch.setattr(DataFrameReader, "load", no_read)
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    assert run_pipeline(spark, cfg, str(tmp_path / "out"), max_ticks=50).ticks_processed == 50
+    assert capture(processed, str(tmp_path / "cap"), tick_start=10, num_records=25) == 25
+    assert capture(processed, str(tmp_path / "cap_orc"), tick_start=10, num_records=25,
+                   partition_by=("status_flag",), fmt="orc") == 25
+    assert capture(processed, str(tmp_path / "cap_empty"), tick_start=10, num_records=0) == 0
+
+
 def test_plot_slice_html(spark, tmp_path):
     from tickdatapipeline_spark.operators.expansion import expand_volume
     from tickdatapipeline_spark.operators.hotloop import hot_loop

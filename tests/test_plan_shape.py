@@ -8,6 +8,8 @@ broadcast.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -60,27 +62,37 @@ def test_runner_keyed_source_is_one_exchange_per_batch(spark, tmp_path):
     assert not any("SinglePartition" in ln for ln in one + three)
 
 
-def test_seeds_add_no_relation_or_broadcast(spark):
-    """A {stream_key: seed} map is an in-plan literal lookup on the key
-    column: the seeded keyed expansion, hot loop and bar plans scan as
-    many leaf relations and plan as many broadcasts as the unseeded ones
-    over the same input."""
-    from tickdatapipeline_spark.config import BarProcessingConfig, SignalProcessingConfig
-    from tickdatapipeline_spark.operators.bars import BarSeed, bar_aggregate
-    from tickdatapipeline_spark.operators.expansion import expand_volume
-    from tickdatapipeline_spark.operators.hotloop import HotLoopSeed, hot_loop
+def _seeded_keyed_input(spark):
+    """Two keyed streams' ticks_raw, a derivative hot-loop config and a
+    hot-loop and bar seed for each stream."""
+    from tickdatapipeline_spark.config import SignalProcessingConfig
+    from tickdatapipeline_spark.operators.bars import BarSeed
+    from tickdatapipeline_spark.operators.hotloop import HotLoopSeed
 
     raw = spark.createDataFrame(
         [(k, i + 1, "20250319 120000 0000000", 41969, 41971, 41970 + i, 1)
          for k in ("A", "B") for i in range(6)],
         "stream string, line_no long, ts_str string, bid long, ask long, last long, volume long")
-    cfg = SignalProcessingConfig(encoder_type="derivative")
-    bp = BarProcessingConfig(enabled=True, ticks_per_bar=4, bar_method="boxcar")
     hot = {k: HotLoopSeed(n_valid0=5, core_seq0=4, sum_bmin0=-1, sum_bmax0=1, partial_cnt0=1,
                           partial_min0=0, partial_max0=0, last_core_ratio0=0.5) for k in "AB"}
     bar = {k: BarSeed(partial_cnt0=1, partial_open0=41970, partial_high0=41970,
                       partial_low0=41970, bars_done0=1, prev_avg0=41970, sum_high0=41970,
-                      sum_low0=41970, norm0=2.0) for k in "AB"}
+                      sum_low0=41970, norm0=2.0, tail_prices0=((4, 41970),)) for k in "AB"}
+    return raw, SignalProcessingConfig(encoder_type="derivative"), hot, bar
+
+
+def test_seeds_add_no_relation_or_broadcast(spark):
+    """A {stream_key: seed} map is an in-plan literal lookup on the key
+    column: the seeded keyed expansion, hot loop and bar plans scan as
+    many leaf relations and plan as many broadcasts as the unseeded ones
+    over the same input."""
+    from tickdatapipeline_spark.config import BarProcessingConfig
+    from tickdatapipeline_spark.operators.bars import bar_aggregate
+    from tickdatapipeline_spark.operators.expansion import expand_volume
+    from tickdatapipeline_spark.operators.hotloop import hot_loop
+
+    raw, cfg, hot, bar = _seeded_keyed_input(spark)
+    bp = BarProcessingConfig(enabled=True, ticks_per_bar=4, bar_method="boxcar")
     expanded = expand_volume(raw, "stream")
     ticks = hot_loop(expanded, cfg, stream_id="stream")
     plans = {
@@ -96,6 +108,50 @@ def test_seeds_add_no_relation_or_broadcast(spark):
             for df in (cold, seeded)
         ]
         assert sum(counts[0][:2]) >= 1 and counts[0] == counts[1], (name, counts)
+
+
+def _array_sizes(plan: str) -> list[int]:
+    """Children of every ``array(...)`` expression in a plan's text."""
+    sizes = []
+    for m in re.finditer(r"\barray\(", plan):
+        depth, children = 1, 1
+        for ch in plan[m.end():]:
+            depth += {"(": 1, ")": -1}.get(ch, 0)
+            if depth == 0:
+                break
+            children += ch == "," and depth == 1
+        sizes.append(children)
+    return sizes
+
+
+def test_tick_operators_are_one_select_per_stage(spark):
+    """hot_loop and bar_aggregate (boxcar and FIR, seeded keyed input)
+    build each stage (a window, join, aggregate or explode) as one select,
+    not a withColumn chain. One select analyzes to at most three Projects
+    in a row (a window select: below the window, above it, the select
+    itself); a stage adds at most four in all (a window stage's select
+    plus the projection of its results, a join's USING columns plus its
+    select). The FIR taps are one array literal, not an array of ~1000
+    literal children."""
+    from tickdatapipeline_spark.config import BarProcessingConfig
+    from tickdatapipeline_spark.operators.bars import bar_aggregate
+    from tickdatapipeline_spark.operators.expansion import expand_volume
+    from tickdatapipeline_spark.operators.hotloop import hot_loop
+
+    raw, cfg, hot, bar = _seeded_keyed_input(spark)
+    ticks = hot_loop(expand_volume(raw, "stream"), cfg, stream_id="stream", seed=hot)
+    plans = {"hot_loop": ticks}
+    for method in ("boxcar", "FIR"):
+        bp = BarProcessingConfig(enabled=True, ticks_per_bar=4, bar_method=method)
+        plans[method] = bar_aggregate(ticks, bp, stream_id="stream", seed=bar)
+    for name, df in plans.items():
+        plan = df._jdf.queryExecution().analyzed().toString()
+        nodes = [m.group(1) for m in re.finditer(r"^[\s:+\-]*([A-Za-z]+)", plan, re.M)]
+        runs = "".join("P" if n == "Project" else " " for n in nodes).split()
+        stages = sum(n in ("Window", "Join", "Aggregate", "Generate") for n in nodes)
+        assert max(map(len, runs)) <= 3, (name, max(map(len, runs)))
+        assert nodes.count("Project") <= 4 * stages, (name, nodes.count("Project"), stages)
+        assert max(_array_sizes(plan), default=0) <= 16, (name, max(_array_sizes(plan)))
 
 
 def test_read_tick_file_keeps_one_single_partition_exchange(spark, tmp_path):

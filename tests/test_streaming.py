@@ -187,7 +187,7 @@ def test_fanout_priority_vs_dropping(spark):
         mgr.subscribe("p", ConsumerType.ANALYTICS, lambda df, bid: None)
 
     batch = spark.range(10).withColumnRenamed("id", "tick_idx")
-    n, ok, dropped = mgr.broadcast_batch(batch, 0)
+    n, ok, dropped = mgr.broadcast_batch(batch, 0, 10)
     assert (n, ok) == (2, 2)
     assert seen["p"] == 10      # priority never drops
     assert seen["m"] == 4       # monitoring capped at buffer_size
@@ -213,7 +213,7 @@ def test_fanout_slow_consumer_buffer_carryover(spark):
 
     for b in range(3):  # 3 batches x 5 rows
         batch = spark.range(b * 5, b * 5 + 5).withColumnRenamed("id", "tick_idx")
-        mgr.broadcast_batch(batch, b)
+        mgr.broadcast_batch(batch, b, 5)
 
     st = mgr.stats()
     # PRIORITY: every row of every batch, zero drops
@@ -246,7 +246,7 @@ def test_fanout_buffered_rows_pinned_against_source_mutation(spark, tmp_path):
                   lambda df, bid: got.extend((r.tick_idx, r.v) for r in df.collect()),
                   buffer_size=8, drain_rate=2)
 
-    mgr.broadcast_batch(spark.read.parquet(src), 0)  # accepts 4, drains 2
+    mgr.broadcast_batch(spark.read.parquet(src), 0, 4)  # accepts 4, drains 2
     assert got == [(0, 100), (1, 101)]
 
     # rotate the source: same schema, entirely different contents
@@ -256,7 +256,7 @@ def test_fanout_buffered_rows_pinned_against_source_mutation(spark, tmp_path):
 
     # an empty interval just drains the buffer
     empty = spark.createDataFrame([], "tick_idx long, v long")
-    mgr.broadcast_batch(empty, 1)
+    mgr.broadcast_batch(empty, 1, 0)
     assert got == [(0, 100), (1, 101), (2, 102), (3, 103)]  # original rows
     st = mgr.stats()
     assert st["m"]["messages_sent"] == 4 and st["m"]["messages_dropped"] == 0

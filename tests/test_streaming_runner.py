@@ -154,10 +154,10 @@ def test_fanout_priority_failure_raises_monitoring_failure_counted(spark):
     mgr = TripleSplitManager()
     mgr.subscribe("m", ConsumerType.MONITORING, fail)
     mgr.subscribe("a", ConsumerType.ANALYTICS, lambda df, bid: None)
-    assert mgr.broadcast_batch(batch, 0) == (2, 1, 0)
+    assert mgr.broadcast_batch(batch, 0, 3) == (2, 1, 0)
     mgr.subscribe("p", ConsumerType.PRIORITY, fail)
     with pytest.raises(RuntimeError, match="sink down"):
-        mgr.broadcast_batch(batch, 1)
+        mgr.broadcast_batch(batch, 1, 3)
     assert (mgr.total_broadcasts, mgr.successful_broadcasts) == (2, 0)
 
 
@@ -178,9 +178,9 @@ def test_fanout_priority_failure_precedes_other_consumers(spark):
                   buffer_size=10)
     mgr.subscribe("p", ConsumerType.PRIORITY, flaky)
     with pytest.raises(RuntimeError, match="sink down"):
-        mgr.broadcast_batch(batch, 0)
+        mgr.broadcast_batch(batch, 0, 3)
     assert seen == [] and mgr.stats()["m"]["messages_sent"] == 0
-    assert mgr.broadcast_batch(batch, 0) == (2, 2, 0)
+    assert mgr.broadcast_batch(batch, 0, 3) == (2, 2, 0)
     assert seen == [0] and mgr.stats()["m"]["messages_sent"] == 3
     assert (mgr.total_broadcasts, mgr.successful_broadcasts) == (2, 1)
 
@@ -260,6 +260,36 @@ def test_runner_priority_failure_replays_batch(spark, tmp_path, feed):
     assert second.metrics.errors == 1
     assert_streams_equal_batch_plan(spark, feed, delivered)
     assert persistent_rdds(spark) <= cached
+
+
+def test_snapshot_is_fsynced_before_rename(tmp_path, monkeypatch):
+    """save_snapshot flushes and fsyncs the temp file before renaming it
+    over the snapshot, so an OS crash cannot leave a renamed but empty
+    snapshot."""
+    from tickdatapipeline_spark.streaming import persistence
+
+    calls = []
+    fsync, replace = persistence.os.fsync, persistence.os.replace
+
+    def record_fsync(fd):
+        st = os.fstat(fd)
+        calls.append(("fsync", st.st_ino, st.st_size))
+        fsync(fd)
+
+    def record_replace(src, dst):
+        calls.append(("replace", os.stat(src).st_ino, dst))
+        replace(src, dst)
+
+    monkeypatch.setattr(persistence.os, "fsync", record_fsync)
+    monkeypatch.setattr(persistence.os, "replace", record_replace)
+    path = str(tmp_path / "state.json")
+    persistence.save_snapshot(path, batch_id=3, states={"A": StreamState(tick0=7)},
+                              bar_states={"A": BarSeed()}, ticks_processed=7)
+    assert [c[0] for c in calls] == ["fsync", "replace"]
+    (_, ino, size), (_, ino2, dst) = calls
+    assert ino == ino2 == os.stat(path).st_ino and dst == path
+    assert size == os.path.getsize(path) > 0
+    assert persistence.load_snapshot(path)[0] == 3
 
 
 def test_runner_crash_after_sink_before_snapshot(spark, tmp_path, monkeypatch):

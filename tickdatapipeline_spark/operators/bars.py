@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, fields
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -138,11 +139,13 @@ def _fir_averages(
     the caller's inner join against completed bars drops them.
     """
     L = len(taps)
-    taps_q = F.array(*[F.lit(round(c * FIR_Q)) for c in taps])
+    # one typed literal, not an array of L literal children: the driver
+    # analyses a single node however long the filter is
+    taps_q = F.lit(np.array([round(c * FIR_Q) for c in taps], dtype=np.int64))
     t = F.col("tick_idx")
     first_end = F.expr(f"((tick_idx + {step - 1}) DIV {step}) * {step}")
     last_end = t + F.lit(L - 1)
-    src = ticks.select(*part, "tick_idx", "raw_price")
+    src = ticks
     if chunked:
         C = _FIR_CHUNK_TAPS * L
         # replicate each tick into the end-chunks its [first_end,
@@ -157,8 +160,10 @@ def _fir_averages(
                 F.expr(f"(tick_idx + {L - 1}) DIV {C}"),
             ),
         )
-        src = src.withColumn("_fc", F.explode(chunk_seq))
-        src = fixed_repartition(src, part + ["_fc"])
+        src = fixed_repartition(
+            ticks.select(*part, "tick_idx", "raw_price", F.explode(chunk_seq).alias("_fc")),
+            part + ["_fc"],
+        )
         # in-chunk end positions: multiples of `step` within
         # [max(first_end, chunk start), min(last_end, chunk end)]
         lo = F.greatest(
@@ -171,13 +176,11 @@ def _fir_averages(
         ends = F.when(
             first_end <= last_end, F.sequence(first_end, last_end, F.lit(step))
         )
-    scattered = (
-        src.withColumn("_e", F.explode(ends))
-        .withColumn("_tap_q", F.element_at(taps_q, (F.col("_e") - t + 1).cast("int")))
-    )
+    scattered = src.select(*part, "tick_idx", "raw_price", F.explode(ends).alias("_e"))
+    tap_q = F.element_at(taps_q, (F.col("_e") - t + 1).cast("int"))
     return (
         scattered.groupBy(*part, F.col("_e").alias("end_tick_idx"))
-        .agg(F.sum(F.col("raw_price") * F.col("_tap_q")).alias("_fir_q"))
+        .agg(F.sum(F.col("raw_price") * tap_q).alias("_fir_q"))
         .select(
             *part,
             "end_tick_idx",
@@ -229,30 +232,38 @@ def bar_aggregate(
         """A running quantity's chunk-offset column: chunked plans only."""
         return col if use_chunks else None
 
-    # DIV, not double '/'+cast: exact for any tick_idx (the double
-    # quotient is only floor-exact below 2^53)
-    df = ticks.withColumn("bar_id", F.expr(f"(tick_idx - 1) DIV {n}"))
-    df = df.withColumn("bar_pos", ((F.col("tick_idx") - 1) % n).cast("long"))
-
-    bars = df.groupBy(*part, "bar_id").agg(
-        F.max(F.when(F.col("bar_pos") == 0, F.col("raw_price"))).alias("bar_open_raw"),
+    # ---- stage 1: the OHLC aggregate. DIV, not double '/'+cast: exact
+    # for any tick_idx (the double quotient is only floor-exact below 2^53)
+    bar_pos = ((F.col("tick_idx") - 1) % n).cast("long")
+    bars = ticks.groupBy(*part, F.expr(f"(tick_idx - 1) DIV {n}").alias("bar_id")).agg(
+        F.max(F.when(bar_pos == 0, F.col("raw_price"))).alias("bar_open_raw"),
         F.max("raw_price").alias("bar_high_raw"),
         F.min("raw_price").alias("bar_low_raw"),
-        F.max(F.when(F.col("bar_pos") == n - 1, F.col("raw_price"))).alias("bar_close_raw"),
-        F.max(F.when(F.col("bar_pos") == n - 1, F.col("timestamp"))).alias("bar_end_timestamp"),
-        F.max(F.when(F.col("bar_pos") == n - 1, F.col("tick_idx"))).alias("end_tick_idx"),
+        F.max(F.when(bar_pos == n - 1, F.col("raw_price"))).alias("bar_close_raw"),
+        F.max(F.when(bar_pos == n - 1, F.col("timestamp"))).alias("bar_end_timestamp"),
+        F.max(F.when(bar_pos == n - 1, F.col("tick_idx"))).alias("end_tick_idx"),
         F.count(F.lit(1)).alias("_cnt"),
     )
 
-    # merge the carried unfinished OHLC bar into its batch remainder
+    # merge the carried unfinished OHLC bar into its batch remainder; the
+    # partial trailing bar never completes
     is_pb = (sd["partial_cnt0"] > 0) & (F.col("bar_id") == sd["bars_done0"])
-    bars = (
-        bars.withColumn("bar_open_raw", F.when(is_pb, sd["partial_open0"]).otherwise(F.col("bar_open_raw")))
-        .withColumn("bar_high_raw", F.when(is_pb, F.greatest("bar_high_raw", sd["partial_high0"])).otherwise(F.col("bar_high_raw")))
-        .withColumn("bar_low_raw", F.when(is_pb, F.least("bar_low_raw", sd["partial_low0"])).otherwise(F.col("bar_low_raw")))
-        .withColumn("_cnt", F.when(is_pb, F.col("_cnt") + sd["partial_cnt0"]).otherwise(F.col("_cnt")))
+    high = F.when(is_pb, F.greatest("bar_high_raw", sd["partial_high0"])).otherwise(F.col("bar_high_raw"))
+    low = F.when(is_pb, F.least("bar_low_raw", sd["partial_low0"])).otherwise(F.col("bar_low_raw"))
+    # boxcar: Int(round((H+L+C)/3)) (BarProcessor.jl:239-245);
+    # (H+L+C)/3 can never be an exact .5 tie for integers, so the
+    # HALF_UP round is engine-agnostic. FIR joins its averages below.
+    boxcar = [] if cfg.bar_method == "FIR" else [
+        F.round((high + low + F.col("bar_close_raw")) / F.lit(3.0), 0).cast("long").alias("bar_average_raw")]
+    bars = bars.where(
+        F.when(is_pb, F.col("_cnt") + sd["partial_cnt0"]).otherwise(F.col("_cnt")) == n
+    ).select(
+        *part, "bar_id",
+        F.when(is_pb, sd["partial_open0"]).otherwise(F.col("bar_open_raw")).alias("bar_open_raw"),
+        high.alias("bar_high_raw"),
+        low.alias("bar_low_raw"),
+        "bar_close_raw", "bar_end_timestamp", "end_tick_idx", *boxcar,
     )
-    bars = bars.where(F.col("_cnt") == n)  # partial trailing bar never completes
 
     if cfg.bar_method == "FIR":
         taps = design_decimation_filter(n)
@@ -270,16 +281,6 @@ def bar_aggregate(
             fir_src = fir_src.unionByName(tail)
         firs = _fir_averages(fir_src, part, taps, step=n, chunked=use_chunks)
         bars = bars.join(firs, on=part + ["end_tick_idx"])
-    else:
-        # boxcar: Int(round((H+L+C)/3)) (BarProcessor.jl:239-245);
-        # (H+L+C)/3 can never be an exact .5 tie for integers, so the
-        # HALF_UP round is engine-agnostic.
-        bars = bars.withColumn(
-            "bar_average_raw",
-            F.round(
-                (F.col("bar_high_raw") + F.col("bar_low_raw") + F.col("bar_close_raw")) / F.lit(3.0), 0
-            ).cast("long"),
-        )
 
     if use_chunks:
         bars = add_chunk(bars, "bar_id", max(chunk_size // n, 1))
@@ -296,21 +297,20 @@ def bar_aggregate(
         wb = Window.partitionBy(*part).orderBy("bar_id")
     wcum = wb.rowsBetween(Window.unboundedPreceding, 0)
 
-    # B4: normalization recomputed every W bars from cumulative H/L sums
-    # (BarProcessor.jl:247-270). bars_completed k is 1-based; a recompute
-    # happens AT bar k when k % W == 0 and uses stats through bar k. Bar
-    # ids are dense (ticks are dense; the trailing-partial filter only
-    # drops the final bar) and a batch's first bar is bars_done0, so k is
-    # the row-local bar_id + 1 — no window needed.
+    # ---- stage 2, B4: normalization recomputed every W bars from
+    # cumulative H/L sums (BarProcessor.jl:247-270). bars_completed k is
+    # 1-based; a recompute happens AT bar k when k % W == 0 and uses stats
+    # through bar k. Bar ids are dense (ticks are dense; the trailing-
+    # partial filter only drops the final bar) and a batch's first bar is
+    # bars_done0, so k is the row-local bar_id + 1 — no window needed.
     k = (F.col("bar_id") + 1).cast("long")
     cum_high = running_sum(F.sum("bar_high_raw").over(wcum), go("_go_h0"), sd["sum_high0"]).cast("double")
     cum_low = running_sum(F.sum("bar_low_raw").over(wcum), go("_go_l0"), sd["sum_low0"]).cast("double")
-    bars = bars.withColumn("k", k)
-    norm_at_k = F.greatest(cum_high / F.col("k").cast("double") - cum_low / F.col("k").cast("double"), F.lit(1.0))
+    norm_at_k = F.greatest(cum_high / k.cast("double") - cum_low / k.cast("double"), F.lit(1.0))
     w_recalc = cfg.normalization_window_bars
-    bars = bars.withColumn(
-        "_norm_recalc", F.when(F.col("k") % w_recalc == 0, norm_at_k)
-    )
+    # a window cannot read another window's result in the same select:
+    # the recompute is this stage's output, carried forward by the next
+    bars = bars.select("*", F.when(k % w_recalc == 0, norm_at_k).alias("_norm_recalc"))
     if use_chunks:
         # one more offsets pass for the carry-forward quantities that
         # depend on columns computed above: the last norm recalc and the
@@ -324,36 +324,32 @@ def bar_aggregate(
             keys=part,
         )
         bars = bars.join(F.broadcast(carry_off), on=part + [GO_CHUNK], how="left")
-    # the last recalc, else the carried one, else the preload 1.0
-    # (BarProcessor.jl:126, BarSeed's default)
-    bars = bars.withColumn(
-        "bar_normalization",
-        running_last(F.last("_norm_recalc", ignorenulls=True).over(wcum), go("_go_nr"), sd["norm0"]),
+
+    # ---- stage 3: the carry-forwards — the last recalc, else the carried
+    # one, else the preload 1.0 (BarProcessor.jl:126, BarSeed's default),
+    # and the previous bar's average; each window runs once and the
+    # encoder below reads its column
+    bars = bars.select(
+        "*",
+        running_last(F.last("_norm_recalc", ignorenulls=True).over(wcum), go("_go_nr"), sd["norm0"])
+        .alias("bar_normalization"),
+        running_last(F.lag("bar_average_raw").over(wb), go("_go_pavg"), sd["prev_avg0"])
+        .alias("_prev_avg"),
     )
-    prev_avg = running_last(F.lag("bar_average_raw").over(wb), go("_go_pavg"), sd["prev_avg0"])
+    norm, prev_avg = F.col("bar_normalization"), F.col("_prev_avg")
 
     # B5: bar delta = avg_raw - prev avg_raw (UNclipped prev), first bar 0
     # (:272-291); jump guard + winsorize collapse to one clamp.
-    raw_delta = F.when(prev_avg.isNull(), F.lit(0)).otherwise(F.col("bar_average_raw") - prev_avg)
-    bars = bars.withColumn("_raw_delta", raw_delta.cast("long"))
+    raw_delta = F.when(prev_avg.isNull(), F.lit(0)).otherwise(F.col("bar_average_raw") - prev_avg).cast("long")
     eff = min(cfg.max_bar_jump, cfg.winsorize_bar_threshold)
-    bars = bars.withColumn(
-        "bar_price_delta",
-        F.greatest(F.least(F.col("_raw_delta"), F.lit(eff)), F.lit(-eff)).cast("long"),
-    )
-    bars = bars.withColumn(
-        "bar_flags",
-        F.when(F.abs(F.col("_raw_delta")) > eff, F.lit(C.FLAG_CLIPPED)).otherwise(F.lit(C.FLAG_OK)).cast("long"),
-    )
+    delta = F.greatest(F.least(raw_delta, F.lit(eff)), F.lit(-eff)).cast("long")
 
     # B6: derivative encoding (:293-310). Quirk preserved: imaginary part
     # uses unclipped average delta; first bar's prev_normalized is 0.
-    norm = F.col("bar_normalization")
-    sig_re = F.col("bar_price_delta").cast("double") / norm
+    sig_re = delta.cast("double") / norm
     prev_normalized = F.when(prev_avg.isNull(), F.lit(0.0)).otherwise(prev_avg.cast("double") / norm)
     cur_normalized = F.col("bar_average_raw").cast("double") / norm
     sig_im = (cur_normalized - prev_normalized) * F.lit(float(cfg.bar_derivative_imag_scale))
-    bars = bars.withColumn("bar_sig_re", sig_re).withColumn("bar_sig_im", sig_im)
 
     return bars.select(
         *part,
@@ -365,11 +361,12 @@ def bar_aggregate(
         "bar_low_raw",
         "bar_close_raw",
         "bar_average_raw",
-        "bar_price_delta",
-        "bar_sig_re",
-        "bar_sig_im",
+        delta.alias("bar_price_delta"),
+        sig_re.alias("bar_sig_re"),
+        sig_im.alias("bar_sig_im"),
         "bar_normalization",
-        "bar_flags",
+        F.when(F.abs(raw_delta) > eff, F.lit(C.FLAG_CLIPPED)).otherwise(F.lit(C.FLAG_OK))
+        .cast("long").alias("bar_flags"),
         "bar_end_timestamp",
         "end_tick_idx",
     )
@@ -386,18 +383,14 @@ def enrich_ticks_with_bars(
     # silently bind to the wrong side (drop(bars[stream_id]) removed the
     # ticks-side column, nulling `stream` on non-completing rows). Renaming
     # the bars-side keys breaks the ambiguity outright.
-    part = [stream_id] if stream_id else []
-    renamed = bars.withColumnRenamed("end_tick_idx", "_b_end_tick_idx")
-    for c in part:
-        renamed = renamed.withColumnRenamed(c, f"_b_{c}")
+    keys = ([stream_id] if stream_id else []) + ["end_tick_idx"]
+    renamed = bars.select(*[F.col(c).alias(f"_b_{c}") if c in keys else c for c in bars.columns])
     cond = ticks["tick_idx"] == renamed["_b_end_tick_idx"]
-    for c in part:
-        cond = cond & (ticks[c] == renamed[f"_b_{c}"])
+    if stream_id:
+        cond = cond & (ticks[stream_id] == renamed[f"_b_{stream_id}"])
     # no broadcast hint: bars is rows/N — AQE broadcasts when small, and
     # at 100 TB this is a co-partitioned shuffle join per stream
-    return ticks.join(renamed, cond, "left").drop(
-        "_b_end_tick_idx", *[f"_b_{c}" for c in part]
-    )
+    return ticks.join(renamed, cond, "left").drop(*[f"_b_{c}" for c in keys])
 
 
 def vwap_bars(raw: DataFrame, bar_size: int) -> DataFrame:

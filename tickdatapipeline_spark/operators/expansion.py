@@ -167,8 +167,9 @@ def expand_volume(
     # Spark's sequence(start, stop) auto-steps -1 when stop < start — so
     # gate it; explode(NULL) emits no rows, matching generate_series(1,0)
     seq = F.when(F.col("volume") >= 1, F.sequence(F.lit(1), F.col("volume")))
-    df = ticks_raw.withColumn("prev_last", F.lag("last").over(w_lines)).withColumn(
-        "replica_idx", F.explode(seq))
+    # the lag reads the line table, so its window runs before the explode
+    df = ticks_raw.select("*", F.lag("last").over(w_lines).alias("prev_last")).select(
+        "*", F.explode(seq).alias("replica_idx"))
 
     def go(col: str) -> "str | None":
         """A running quantity's chunk-offset column: chunked plans only."""

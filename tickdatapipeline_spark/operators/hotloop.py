@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, fields
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -76,9 +77,9 @@ class HotLoopSeed:
 
 
 def _hexad_expr(ratio: Column, tick_idx: Column) -> tuple[Column, Column]:
-    """E1: z = ratio * HEXAD16[(tick_idx-1) & 15] (TickHotLoopF32.jl:122-134)."""
-    re_lut = F.array(*[F.lit(re) for re, _ in C.HEXAD16])
-    im_lut = F.array(*[F.lit(im) for _, im in C.HEXAD16])
+    """E1: z = ratio * HEXAD16[(tick_idx-1) & 15] (TickHotLoopF32.jl:122-134).
+    Each LUT is one typed array literal."""
+    re_lut, im_lut = (F.lit(np.array(lut, dtype=np.float64)) for lut in zip(*C.HEXAD16))
     phase = ((tick_idx - 1) % 16).cast("int") + 1  # 1-based element_at
     return ratio * F.element_at(re_lut, phase), ratio * F.element_at(im_lut, phase)
 
@@ -141,9 +142,8 @@ def hot_loop(
     # seed is an in-plan lookup on the stream key (literals unseeded),
     # mirroring the reference's one TickHotLoopState per stream
     hs = seed_columns(seed, stream_id, HotLoopSeed(), [f.name for f in fields(HotLoopSeed)])
-    df = expanded.withColumn(
-        "is_valid", F.col("raw_price").between(cfg.min_price, cfg.max_price)
-    )
+    is_valid = F.col("raw_price").between(cfg.min_price, cfg.max_price)
+    df = expanded
     if use_chunks:
         # shared by the offsets subplans, the bar aggregate and the main
         # plan — pin once so the single job computes the lineage once
@@ -153,29 +153,27 @@ def hot_loop(
             # build the per-chunk valid-count offsets from the expanded
             # rows — one extra full-data groupBy pass + broadcast join
             valid_offsets = chunk_offsets_plan(
-                df, sums={"_go_v0": F.when(F.col("is_valid"), 1).otherwise(0)},
-                keys=part,
+                df, sums={"_go_v0": F.when(is_valid, 1).otherwise(0)}, keys=part,
             )
             df = df.join(F.broadcast(valid_offsets), on=part + [GO_CHUNK], how="left")
-    df = df.withColumn("n_valid_upto", running_sum(
-        F.count(F.when(F.col("is_valid"), 1)).over(wcum), go("_go_v0"), hs["n_valid0"]))
-    is_core = F.col("is_valid") & (F.col("n_valid_upto") >= 2)
+
+    # ---- stage 1: the valid-count window, then the row-local columns it
+    # fixes. Spark evaluates a window function once per occurrence in a
+    # select, so a window result is read by the next select, never inlined
+    # twice.
+    df = df.select("*", is_valid.alias("is_valid"), running_sum(
+        F.count(F.when(is_valid, 1)).over(wcum), go("_go_v0"), hs["n_valid0"]
+    ).alias("n_valid_upto"))
+    n_valid_upto = F.col("n_valid_upto")
     # (the 'first' leg of the taxonomy needs no own column: it is the
     # valid-but-not-core row, handled implicitly by is_core/is_hold)
-    is_hold = (~F.col("is_valid")) & (F.col("n_valid_upto") >= 1)
-    is_zero = (~F.col("is_valid")) & (F.col("n_valid_upto") == 0)
-    df = df.withColumn("is_core", is_core).withColumn("is_zero", is_zero)
+    is_core = F.col("is_valid") & (n_valid_upto >= 2)
 
     # Jump guard then winsorize collapse to one clamp at the tighter bound
     # (TickHotLoopF32.jl:347-359): clip(clip(d, +-mj), +-wt) == clip(d, +-min(mj, wt))
     eff = min(cfg.max_jump, cfg.winsorize_delta_threshold)
     delta_w = F.when(
-        F.col("is_core"),
-        F.greatest(F.least(F.col("price_delta"), F.lit(eff)), F.lit(-eff)),
-    )
-    df = df.withColumn("delta_w", delta_w.cast("long"))
-    df = df.withColumn(
-        "clipped", F.col("is_core") & (F.abs(F.col("price_delta")) > eff)
+        is_core, F.greatest(F.least(F.col("price_delta"), F.lit(eff)), F.lit(-eff)),
     )
 
     # Bar position over core (accepted) ticks only (:377-381). Row-local,
@@ -187,19 +185,21 @@ def hot_loop(
     # suites; measured r14 (alternating same-session A/B, min of 4): trio
     # total 10.8 -> 9.3 s.
     first_corr = F.when(
-        (hs["n_valid0"] == 0) & (F.col("n_valid_upto") >= 1), F.lit(1)
+        (hs["n_valid0"] == 0) & (n_valid_upto >= 1), F.lit(1)
     ).otherwise(F.lit(0))
-    df = df.withColumn(
-        "core_seq",
-        F.col("n_valid_upto") - hs["n_valid0"] - first_corr + hs["core_seq0"],
-    )
+    core_seq = n_valid_upto - hs["n_valid0"] - first_corr + hs["core_seq0"]
     n = stats_ticks_per_bar
-    df = df.withColumn(
-        "bars_done", F.when(F.col("is_core"), F.expr(f"core_seq DIV {n}"))
+    df = df.select(
+        "*",
+        is_core.alias("is_core"),
+        delta_w.cast("long").alias("delta_w"),
+        core_seq.alias("core_seq"),
+        F.when(is_core, F.call_function("div", core_seq, F.lit(n))).alias("bars_done"),
+        F.when(is_core, F.call_function("div", core_seq - 1, F.lit(n))).alias("bar_ord"),
     )
-    df = df.withColumn(
-        "bar_ord", F.when(F.col("is_core"), F.expr(f"(core_seq - 1) DIV {n}"))
-    )
+    is_hold = (~F.col("is_valid")) & (F.col("n_valid_upto") >= 1)
+    is_zero = (~F.col("is_valid")) & (F.col("n_valid_upto") == 0)
+    clipped = F.col("is_core") & (F.abs(F.col("price_delta")) > eff)
 
     # NOTE (r14, measured): the bars aggregate below re-executes the
     # serial window lineage as a broadcast subquery (no exchange to
@@ -211,9 +211,9 @@ def hot_loop(
     # windowed path only ever runs below the two-pass cutover, so the
     # duplicated lineage is bounded; the chunked path pins because its
     # offsets subqueries multiply consumers.
-    # Per-bar min/max of winsorized deltas; only FULL bars trigger a
-    # normalization recompute (:383-405). The groupBy is a 144x reduction;
-    # the result is tiny -> broadcast back to the tick stream.
+    # ---- stage 2: per-bar min/max of winsorized deltas; only FULL bars
+    # trigger a normalization recompute (:383-405). The groupBy is a 144x
+    # reduction; the result is tiny -> broadcast back to the tick stream.
     bars = df.where(F.col("is_core")).groupBy(*part, "bar_ord").agg(
         F.min("delta_w").alias("bmin"),
         F.max("delta_w").alias("bmax"),
@@ -223,13 +223,12 @@ def hot_loop(
     # this batch's first core tick) into its batch remainder;
     # least/greatest skip NULL partial min/max for streams with no carry
     is_pb = (hs["partial_cnt0"] > 0) & (F.col("bar_ord") * n < hs["core_seq0"])
-    bars = bars.select(
+    cnt = F.when(is_pb, F.col("cnt") + hs["partial_cnt0"]).otherwise(F.col("cnt"))
+    bars = bars.where(cnt == n).select(
         *part, "bar_ord",
         F.when(is_pb, F.least("bmin", hs["partial_min0"])).otherwise(F.col("bmin")).alias("bmin"),
         F.when(is_pb, F.greatest("bmax", hs["partial_max0"])).otherwise(F.col("bmax")).alias("bmax"),
-        F.when(is_pb, F.col("cnt") + hs["partial_cnt0"]).otherwise(F.col("cnt")).alias("cnt"),
     )
-    bars = bars.where(F.col("cnt") == n)
     if use_chunks:
         # same two-pass shape one level up the hierarchy: the bar frame
         # is rows/144 but still unbounded for a single 100 TB stream
@@ -245,6 +244,7 @@ def hot_loop(
     else:
         wb = Window.partitionBy(*part).orderBy("bar_ord")
     wb = wb.rowsBetween(Window.unboundedPreceding, 0)
+    # ---- stage 3: the stats bars' running sums -> cached normalization
     k = (F.col("bar_ord") + 1).cast("double")
     sum_bmin = running_sum(F.sum("bmin").over(wb), go("_go_bmin0"), hs["sum_bmin0"])
     sum_bmax = running_sum(F.sum("bmax").over(wb), go("_go_bmax0"), hs["sum_bmax0"])
@@ -267,42 +267,36 @@ def hot_loop(
         # and the final plan don't both recompute the bar aggregation
         norms = pin(norms)
 
+    # ---- stage 4: the norms join, then one select: normalize, flag, encode
     # NO broadcast hint: norms is rows/144 — tiny locally (AQE broadcasts
     # it automatically) but far too large to broadcast at 100 TB, where
     # this becomes a stream-co-partitioned shuffle join.
-    join_keys = part + ["bars_done"]
-    df = df.join(norms, on=join_keys, how="left")
+    df = df.join(norms, on=part + ["bars_done"], how="left")
     inv = F.when(
         F.col("is_core"), F.coalesce(F.col("inv_q16"), hs["inv_q16_0"])
     )
-    df = df.withColumn("inv_q16", inv)
-
     # Q16 fixed-point normalize (:407-414) — exact in double.
-    df = df.withColumn("nq16", F.col("delta_w") * F.col("inv_q16"))
-    ratio = F.when(F.col("is_core"), F.col("nq16").cast("double") * F.lit(C.Q16_INV)).otherwise(F.lit(0.0))
-    df = df.withColumn("ratio", ratio)
+    nq16 = F.col("delta_w") * inv
+    ratio = F.when(F.col("is_core"), nq16.cast("double") * F.lit(C.Q16_INV)).otherwise(F.lit(0.0))
     # inv_q16 can be 0 (norm >= 131072 rounds the reciprocal to zero);
     # the reference's float division then yields Inf32
     # (TickHotLoopF32.jl:413) — Spark ANSI would throw, so emit inf
     # explicitly.
     norm_out = F.when(
         F.col("is_core"),
-        F.when(F.col("inv_q16") == 0, F.lit(float("inf"))).otherwise(
-            F.lit(1.0) / (F.col("inv_q16").cast("double") * F.lit(C.Q16_INV))
+        F.when(inv == 0, F.lit(float("inf"))).otherwise(
+            F.lit(1.0) / (inv.cast("double") * F.lit(C.Q16_INV))
         ),
     ).otherwise(F.lit(1.0))
-    df = df.withColumn("normalization", norm_out)
-
     flag = (
         F.when(is_hold, F.lit(C.FLAG_HOLDLAST))
-        .when(F.col("clipped"), F.lit(C.FLAG_CLIPPED))
+        .when(clipped, F.lit(C.FLAG_CLIPPED))
         .otherwise(F.lit(C.FLAG_OK))
     )
-    df = df.withColumn("status_flag", flag.cast("long"))
 
     # ---- encoders (E1-E5, dispatch :416-432) ----
     enc = cfg.encoder_type
-    invoked = ~F.col("is_zero")  # encoders run on every row except `zero` rows
+    invoked = ~is_zero  # encoders run on every row except `zero` rows
     if use_chunks and enc != "hexad16":
         # the encoder prefix needs one more chunk summary over the
         # post-join frame — pin it so summary + final plan share work.
@@ -312,33 +306,29 @@ def hot_loop(
         # subquery, tripling the full-data exchange nodes the plan-shape
         # test pins; kept for the bounded verified shape.)
         df = pin(df)
+    internals = []
     if enc == "derivative":
         # prev ratio over core rows only (:257-282; hold/first rows fall to
         # the hexad16 branch in the reference and do not touch prev state).
         local_prev = F.last(
-            F.when(F.col("is_core"), F.col("ratio")), ignorenulls=True
+            F.when(F.col("is_core"), ratio), ignorenulls=True
         ).over(w.rowsBetween(Window.unboundedPreceding, -1))
         if use_chunks:
             # cross-chunk carry: last core ratio of preceding chunks
             off2 = chunk_offsets_plan(
                 df,
-                carries={
-                    "_go_lr": (
-                        F.col("tick_idx"),
-                        F.when(F.col("is_core"), F.col("ratio")),
-                    )
-                },
+                carries={"_go_lr": (F.col("tick_idx"), F.when(F.col("is_core"), ratio))},
                 keys=part,
             )
             df = df.join(F.broadcast(off2), on=part + [GO_CHUNK], how="left")
         prev = running_last(local_prev, go("_go_lr"), hs["last_core_ratio0"])
-        sig_re = F.when(F.col("is_core"), F.col("ratio")).otherwise(F.lit(0.0))
+        sig_re = F.when(F.col("is_core"), ratio).otherwise(F.lit(0.0))
         sig_im = F.when(
             F.col("is_core"),
-            (F.col("ratio") - prev) * F.lit(float(cfg.tick_derivative_imag_scale)),
+            (ratio - prev) * F.lit(float(cfg.tick_derivative_imag_scale)),
         ).otherwise(F.lit(0.0))
     elif enc == "hexad16":
-        sig_re, sig_im = _hexad_expr(F.col("ratio"), F.col("tick_idx"))
+        sig_re, sig_im = _hexad_expr(ratio, F.col("tick_idx"))
     elif enc == "cpm":
         # Phase accumulation is an associative cumulative sum (:160-176):
         # dp = trunc32(round(ratio * 2h * 2^31)); theta = cumsum(dp) mod 2^32.
@@ -346,7 +336,7 @@ def hot_loop(
         # h=0.5 (integral product, see the pi/2 golden) but reachable at
         # h values with >16 fractional bits (e.g. h=2^-17).
         scale = 2.0 * float(cfg.cpm_modulation_index) * 2.0**31
-        dp = F.when(F.col("is_core"), F.bround(F.col("ratio") * F.lit(scale), 0).cast("long")).otherwise(F.lit(0))
+        dp = F.when(F.col("is_core"), F.bround(ratio * F.lit(scale), 0).cast("long")).otherwise(F.lit(0))
         if use_chunks:
             # the offsets hierarchy reduces mod 2^32 at EVERY level
             # (per-chunk totals, within-super prefixes, super totals —
@@ -371,7 +361,7 @@ def hot_loop(
         # theta is observable under keep_internals so the half-even tie
         # policy can be pinned by a golden (a +-1 in theta is invisible
         # through the 10-bit LUT index).
-        df = df.withColumn("cpm_theta", theta)
+        internals = [theta.alias("cpm_theta")]
     elif enc == "amc":
         # Carrier advances by a constant 2^32/16 per *invocation* (:203-230);
         # closed form: theta = incr * (# invoked rows so far) mod 2^32.
@@ -391,30 +381,28 @@ def hot_loop(
         )
         idx = (theta / F.lit(2**C.CPM_INDEX_SHIFT)).cast("long")
         lre, lim = _lut_trig(idx)
-        sig_re = F.when(invoked, F.col("ratio") * lre).otherwise(F.lit(0.0))
-        sig_im = F.when(invoked, F.col("ratio") * lim).otherwise(F.lit(0.0))
+        sig_re = F.when(invoked, ratio * lre).otherwise(F.lit(0.0))
+        sig_im = F.when(invoked, ratio * lim).otherwise(F.lit(0.0))
     else:
         raise ValueError(f"unknown encoder_type: {enc}")
-
-    df = df.withColumn("sig_re", sig_re).withColumn("sig_im", sig_im)
 
     out_cols = part + [
         "tick_idx",
         "timestamp",
         "raw_price",
         "price_delta",
-        "sig_re",
-        "sig_im",
-        "normalization",
-        "status_flag",
+        sig_re.alias("sig_re"),
+        sig_im.alias("sig_im"),
+        norm_out.alias("normalization"),
+        flag.cast("long").alias("status_flag"),
     ]
     if keep_internals:
-        out_cols += ["is_valid", "is_core", "core_seq", "delta_w", "bar_ord", "bars_done", "inv_q16", "nq16", "ratio",
+        out_cols += ["is_valid", "is_core", "core_seq", "delta_w", "bar_ord", "bars_done",
+                     inv.alias("inv_q16"), nq16.alias("nq16"), ratio.alias("ratio"),
                      "n_valid_upto", "sum_bmin_upto", "sum_bmax_upto",
                      # delta_w merged with the carried stats bar: the
                      # row-level twin of the bars' is_pb merge
                      F.when(is_pb, F.least("delta_w", hs["partial_min0"])).otherwise(F.col("delta_w")).alias("bar_dmin"),
-                     F.when(is_pb, F.greatest("delta_w", hs["partial_max0"])).otherwise(F.col("delta_w")).alias("bar_dmax")]
-        if enc == "cpm":
-            out_cols += ["cpm_theta"]
+                     F.when(is_pb, F.greatest("delta_w", hs["partial_max0"])).otherwise(F.col("delta_w")).alias("bar_dmax"),
+                     *internals]
     return df.select(*out_cols)

@@ -20,7 +20,7 @@ import time
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tickdatapipeline_spark.config import PipelineConfig
@@ -59,17 +59,20 @@ def build_processed(spark: SparkSession, cfg: PipelineConfig,
 
 def _run(spark: SparkSession, cfg: PipelineConfig, output_path: str,
          max_ticks: int | None, with_bars: bool) -> PipelineResult:
-    """The body of both entry points: plan, write, count what landed.
+    """The body of both entry points: plan, write, count what it wrote.
     Without bars the output is hot_loop's, i.e. TICK_CAPTURE_COLS."""
     t0 = time.time()
     out = processed = build_processed(spark, cfg, max_ticks)
     if with_bars:
         out = enrich_ticks_with_bars(processed, bar_aggregate(processed, cfg.bar_processing))
+    # the write counts its rows itself: no second job re-reads the output
+    written = Observation()
+    out = out.observe(written, F.count(F.lit(1)).alias("rows"))
     t1 = time.time()
     out.write.mode("overwrite").parquet(output_path)
     t2 = time.time()
     return PipelineResult(
-        ticks_processed=spark.read.parquet(output_path).count(), errors=0,
+        ticks_processed=written.get["rows"], errors=0,
         elapsed_s=t2 - t0, signal_stage_s=t1 - t0, sink_stage_s=t2 - t1,
     )
 
@@ -123,11 +126,12 @@ def capture(processed: DataFrame, output_path: str, *, tick_start: int = 0,
         df = df.select(*partition_by, *[c for c in cols if c not in partition_by])
     else:
         df = df.select(*cols)
-    writer = df.write.mode("overwrite")
+    written = Observation()
+    writer = df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.format(fmt).save(output_path)
-    return df.sparkSession.read.format(fmt).load(output_path).count()
+    return written.get["rows"]
 
 
 def csv_export(spark: SparkSession, parquet_path: str, csv_path: str) -> None:

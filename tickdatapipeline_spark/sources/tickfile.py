@@ -19,7 +19,7 @@ ordering ever materializes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tickdatapipeline_spark.sources.io import read_parquet
@@ -29,7 +29,7 @@ from tickdatapipeline_spark.sources.io import read_parquet
 
 
 def _parse_tick_lines(
-    lines: DataFrame, part: list[str], order: list[str]
+    lines: DataFrame, part: list[str], order: "list[Column]"
 ) -> DataFrame:
     """The one tick-line parse: a text scan's ``value`` column ->
     (*part, line_no, ts_str, bid, ask, last, volume).
@@ -39,30 +39,29 @@ def _parse_tick_lines(
     silently drop empty/malformed lines (:162-171). ``line_no`` numbers
     the *parsed* lines per ``part`` in (``order``, scan position) order,
     matching the reference's first_tick/previous_last bookkeeping which
-    only advances on successful parses. The scan position is taken before
-    the blank-line filter, so it follows file byte order.
+    only advances on successful parses. ``order`` holds expressions the
+    numbering window evaluates on the scanned rows (the runner's file
+    name). The scan position is taken in the scan's own tasks after the
+    blank/malformed-line filters, which keep the rows' order, so it
+    follows file byte order.
     """
     parts = F.split(F.col("value"), ";")
     fields = ["bid", "ask", "last", "volume"]
     df = (
-        lines.withColumn("_mid", F.monotonically_increasing_id())
-        .where(F.length(F.trim(F.col("value"))) > 0)
-        .withColumn("_parts", parts)
+        lines.where((F.length(F.trim(F.col("value"))) > 0) & (F.size(parts) == 5))
         # F.get is 0-based and null-safe on short arrays (ANSI mode keeps
         # element_at strict); try_cast nulls out non-integer fields.
         .select(
-            *part, *order, "_mid", "_parts",
-            F.trim(F.get("_parts", 0)).alias("ts_str"),
-            *[F.trim(F.get("_parts", i + 1)).try_cast("long").alias(c)
+            *part,
+            F.trim(F.get(parts, 0)).alias("ts_str"),
+            *[F.trim(F.get(parts, i + 1)).try_cast("long").alias(c)
               for i, c in enumerate(fields)],
         )
-        .where((F.size("_parts") == 5) & F.col("bid").isNotNull()
-               & F.col("ask").isNotNull() & F.col("last").isNotNull()
-               & F.col("volume").isNotNull())
+        .where(F.col("bid").isNotNull() & F.col("ask").isNotNull()
+               & F.col("last").isNotNull() & F.col("volume").isNotNull())
     )
-    w = Window.partitionBy(*part).orderBy(*order, "_mid")
-    return df.withColumn("line_no", F.row_number().over(w)).select(
-        *part, "line_no", "ts_str", *fields)
+    w = Window.partitionBy(*part).orderBy(*order, F.monotonically_increasing_id())
+    return df.select(*part, F.row_number().over(w).alias("line_no"), "ts_str", *fields)
 
 
 def read_tick_file(spark: SparkSession, path: str) -> DataFrame:
@@ -213,7 +212,7 @@ def read_tick_files(spark: SparkSession, path_glob: str) -> DataFrame:
     The live runner reads a micro-batch the same way, keyed by stream
     instead of by file.
     """
-    lines = spark.read.text(path_glob).withColumn("stream", F.input_file_name())
+    lines = spark.read.text(path_glob).select("value", F.input_file_name().alias("stream"))
     return _parse_tick_lines(lines, ["stream"], [])
 
 

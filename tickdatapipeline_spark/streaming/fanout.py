@@ -141,9 +141,12 @@ class TripleSplitManager:
             quota -= len(take)
         return dropped
 
-    def broadcast_batch(self, df: DataFrame, batch_id: int = 0) -> tuple[int, int, int]:
-        """Deliver one batch to every consumer; returns
+    def broadcast_batch(self, df: DataFrame, batch_id: int, n_rows: int) -> tuple[int, int, int]:
+        """Deliver one batch of ``n_rows`` rows to every consumer; returns
         (n_consumers, n_successful, total_rows_dropped).
+
+        ``n_rows`` is the caller's count of ``df``: the runner knows it
+        from its stream states, and counting here would re-run the plan.
 
         PRIORITY consumers are served first, and one's exception
         propagates: its delivery is guaranteed, so the caller must not
@@ -155,7 +158,6 @@ class TripleSplitManager:
         with self._lock:  # snapshot under lock, deliver outside
             consumers = sorted(self._consumers.values(),
                                key=lambda c: c.ctype is not ConsumerType.PRIORITY)
-        n_rows = df.count()
         self.total_broadcasts += 1
         successful = 0
         dropped_total = 0

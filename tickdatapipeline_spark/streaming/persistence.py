@@ -51,7 +51,9 @@ def _decode_bars(d: dict):
 
 def save_snapshot(path: str, *, batch_id: int, states: dict, bar_states: dict,
                   ticks_processed: int) -> None:
-    """Atomic post-batch snapshot (write temp, rename over)."""
+    """Atomic, durable post-batch snapshot: write a temp file, fsync
+    it, rename it over. Without the fsync an OS crash can leave the
+    rename on disk ahead of the data, i.e. an empty snapshot."""
     doc = {
         "batch_id": batch_id,
         "ticks_processed": ticks_processed,
@@ -61,6 +63,8 @@ def save_snapshot(path: str, *, batch_id: int, states: dict, bar_states: dict,
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(doc, f)
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp, path)
 
 

@@ -124,9 +124,9 @@ class StreamingTickPipeline:
             return None, set()
         key = self.stream_key or (lambda _path: ONE_KEY)
         lookup = F.create_map(*[F.lit(x) for f in files for x in (f, key(f))])
-        lines = batch_df.withColumn("_file", F.input_file_name())
+        file = F.input_file_name()
         return _parse_tick_lines(
-            lines.withColumn(KEY, lookup[F.col("_file")]), [KEY], ["_file"]
+            batch_df.select("value", lookup[file].alias(KEY)), [KEY], [file]
         ), {key(f) for f in files}
 
     # -- one micro-batch: keyed read -> seeded ops -> one broadcast -------
@@ -140,12 +140,15 @@ class StreamingTickPipeline:
         # keeps every stream ever seen (e.g. one per day file)
         states, bar_states = ({k: m[k] for k in keys if k in m}
                               for m in (self.states, self.bar_states))
-        signal_us = broadcast_us = broadcasts = errors = 0
+        signal_us = broadcast_us = broadcasts = errors = ticks = 0
         processed = bars = None
         try:
             if raw is not None:
                 t_sig = time.perf_counter()
                 processed, states = advance_streams(raw, self.cfg, states, KEY)
+                # tick ids are dense per stream, so the batch's rows are
+                # its streams' growth in tick0 (the enrich join is 1:1)
+                ticks = sum(s.tick0 - self.states.get(k, StreamState()).tick0 for k, s in states.items())
                 signal_us = int((time.perf_counter() - t_sig) * 1e6)
                 out = processed.select(KEY, *OUT_COLS)
                 if self.bar_cfg is not None and self.bar_cfg.enabled:
@@ -155,7 +158,7 @@ class StreamingTickPipeline:
                 keyless = self.stream_key is None
                 t_bc = time.perf_counter()
                 n, ok, _ = self.manager.broadcast_batch(
-                    out.drop(KEY) if keyless else out, batch_id
+                    out.drop(KEY) if keyless else out, batch_id, ticks
                 )
                 broadcast_us = int((time.perf_counter() - t_bc) * 1e6)
                 broadcasts, errors = 1, n - ok
@@ -165,12 +168,11 @@ class StreamingTickPipeline:
             for df in (bars, processed):
                 if df is not None:
                     df.unpersist()
-        ticks_before = self.ticks_processed
         self.states = {**self.states, **states}
         self.bar_states = {**self.bar_states, **bar_states}
         self.ticks_processed = sum(s.tick0 for s in self.states.values())
         self.metrics.record_batch(
-            ticks=self.ticks_processed - ticks_before,
+            ticks=ticks,
             total_us=int((time.perf_counter() - batch_t0) * 1e6),
             signal_us=signal_us,
             broadcast_us=broadcast_us,

@@ -79,7 +79,7 @@ def advance(
     stream-key column KEY, here the constant ONE_KEY.
     """
     processed, states = advance_streams(
-        raw_batch.withColumn(KEY, F.lit(ONE_KEY)), cfg, {ONE_KEY: state},
+        raw_batch.select("*", F.lit(ONE_KEY).alias(KEY)), cfg, {ONE_KEY: state},
         KEY, stats_ticks_per_bar,
     )
     return processed, states[ONE_KEY]
@@ -90,7 +90,7 @@ def advance_bars(ticks_batch: DataFrame, bp, seed):
     ``bars_df`` is the cached frame of the bars completing in this batch,
     with the constant KEY column; unpersist() it after writing."""
     bars, seeds = advance_bars_streams(
-        ticks_batch.withColumn(KEY, F.lit(ONE_KEY)), bp, {ONE_KEY: seed}, KEY,
+        ticks_batch.select("*", F.lit(ONE_KEY).alias(KEY)), bp, {ONE_KEY: seed}, KEY,
     )
     return bars, seeds[ONE_KEY]
 
@@ -140,7 +140,7 @@ def advance_bars_streams(
     if keep:  # FIR: the last L-1 prices the next convolutions can reach
         w = Window.partitionBy(stream_id).orderBy(F.col("tick_idx").desc())
         summary = summary.join(
-            ticks_batch.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= keep)
+            ticks_batch.select("*", F.row_number().over(w).alias("_rn")).where(F.col("_rn") <= keep)
             .groupBy(stream_id)
             .agg(F.sort_array(F.collect_list(F.struct("tick_idx", "raw_price"))).alias("tail")),
             stream_id,
