@@ -1,40 +1,46 @@
-"""FIR scatter scale probe (r15): serial vs chunked _fir_averages over
-one giant 1-partition stream (3M ticks, ~10x sf0.1). Measured on the
-round-15 box: serial 10.67 s (1-task stages) vs chunked 2.06 s (5.2x,
-32-task explode stages) -- the at-scale posture bar_aggregate selects
-whenever its two-pass chunk_size is set; the sub-threshold windowed
-path keeps the fused serial scatter, which measures faster at sf0.1
-(1.94 vs 2.29 s bench entry at matched probe_ratio).
+"""FIR bar scale probe: serial vs chunked FIR ``bar_aggregate`` over one
+giant 1-partition stream (default 3M ticks, ~10x sf0.1). The scatter
+carries both the convolution terms and the OHLC aggregates, so this
+times the whole bar stage: ``chunk_size=None`` is the fused serial
+scatter, ``chunk_size`` set (plans/common's at-scale chunk) is the
+chunked scatter plus the two-pass bar windows. Measured at 3M ticks on
+a 32-core box (the scatter alone, before OHLC joined it): serial 10.67 s
+(1-task stages) vs chunked 2.06 s (32-task explode stages); results per
+box are in PERF.md.
 
-Usage: python scripts_dev/fir_scale_probe.py
+Usage: python scripts_dev/fir_scale_probe.py [n_ticks]
+(the Spark master follows SPARK_GRAFT_CPUS, default all cores)
 """
 import json, shutil, sys, time, os
 sys.path.insert(0, ".")
 evdir = "/tmp/fir-probe-ev"
 shutil.rmtree(evdir, ignore_errors=True); os.makedirs(evdir)
 from pyspark.sql import SparkSession
-SparkSession.builder.master("local[32]").config(
+SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]").config(
     "spark.eventLog.enabled", "true").config(
     "spark.eventLog.dir", evdir).config(
     "spark.eventLog.compress", "false").getOrCreate()
 from tickdatapipeline_spark.session import get_spark
-from tickdatapipeline_spark.functions.fir import design_decimation_filter
-from tickdatapipeline_spark.operators.bars import _fir_averages
+from tickdatapipeline_spark.config import BarProcessingConfig
+from tickdatapipeline_spark.operators.bars import bar_aggregate
+from tickdatapipeline_spark.plans.common import TWO_PASS_CHUNK
 from pyspark.sql import functions as F
 spark = get_spark("fir-probe"); spark.sparkContext.setLogLevel("ERROR")
-N = 3_000_000  # ~10x the sf0.1 tick count, ONE partition (a giant stream)
+N = int(sys.argv[1]) if len(sys.argv) > 1 else 3_000_000  # ONE partition: a giant stream
 ticks = spark.range(N).select(
     (F.col("id") + 1).alias("tick_idx"),
     (F.col("id") % 97 + 41970).alias("raw_price"),
+    F.col("id").alias("timestamp"),
 ).coalesce(1).localCheckpoint()  # pinned 1-partition input
-taps = design_decimation_filter(5)
-res = {}
-for label, chunked in (("serial", False), ("chunked", True)):
+bp = BarProcessingConfig(enabled=True, ticks_per_bar=5, bar_method="FIR")
+chunk = min(max(TWO_PASS_CHUNK, N // 10_000), 1 << 27)
+res = {"n_ticks": N}
+for label, chunk_size in (("serial", None), ("chunked", chunk)):
     best = None
     for _ in range(2):
         spark.sparkContext.setJobDescription(f"fir:{label}")
         t0 = time.time()
-        _fir_averages(ticks, [], taps, step=5, chunked=chunked) \
+        bar_aggregate(ticks, bp, chunk_size=chunk_size) \
             .write.format("noop").mode("overwrite").save()
         best = min(best or 9e9, time.time() - t0)
     res[label] = round(best, 2)

@@ -92,15 +92,17 @@ def test_seeds_add_no_relation_or_broadcast(spark):
     from tickdatapipeline_spark.operators.hotloop import hot_loop
 
     raw, cfg, hot, bar = _seeded_keyed_input(spark)
-    bp = BarProcessingConfig(enabled=True, ticks_per_bar=4, bar_method="boxcar")
     expanded = expand_volume(raw, "stream")
     ticks = hot_loop(expanded, cfg, stream_id="stream")
     plans = {
         "expand_volume": (expanded, expand_volume(raw, "stream", seeds={k: (41970, 5) for k in "AB"})),
         "hot_loop": (ticks, hot_loop(expanded, cfg, stream_id="stream", seed=hot)),
-        "bar_aggregate": (bar_aggregate(ticks, bp, stream_id="stream"),
-                          bar_aggregate(ticks, bp, stream_id="stream", seed=bar)),
     }
+    # the FIR seed's price tail too: its convolution terms are an offset
+    for method in ("boxcar", "FIR"):
+        bp = BarProcessingConfig(enabled=True, ticks_per_bar=4, bar_method=method)
+        plans[f"bar_aggregate {method}"] = (bar_aggregate(ticks, bp, stream_id="stream"),
+                                            bar_aggregate(ticks, bp, stream_id="stream", seed=bar))
     for name, (cold, seeded) in plans.items():
         counts = [
             [physical(df).count(node) for node in ("Scan ExistingRDD", "LocalTableScan",
@@ -152,6 +154,29 @@ def test_tick_operators_are_one_select_per_stage(spark):
         assert max(map(len, runs)) <= 3, (name, max(map(len, runs)))
         assert nodes.count("Project") <= 4 * stages, (name, nodes.count("Project"), stages)
         assert max(_array_sizes(plan), default=0) <= 16, (name, max(_array_sizes(plan)))
+
+
+def test_hot_loop_plans_each_window_function_once(spark):
+    """Every encoder's hot loop plans the same window functions with
+    internals as without: a window result that several expressions read
+    (the CPM/AMC phase window behind sig_re, sig_im and cpm_theta, the
+    stats bars' running sums behind inv_q16 and sum_*_upto) is a column
+    of its window's select, since Spark plans a window function once per
+    occurrence."""
+    from tickdatapipeline_spark.config import SignalProcessingConfig
+    from tickdatapipeline_spark.operators.expansion import expand_volume
+    from tickdatapipeline_spark.operators.hotloop import hot_loop
+
+    raw, _, hot, _ = _seeded_keyed_input(spark)
+    expanded = expand_volume(raw, "stream")
+    for enc in ("derivative", "hexad16", "cpm", "amc"):
+        cfg = SignalProcessingConfig(encoder_type=enc)
+        counts = [
+            hot_loop(expanded, cfg, stream_id="stream", seed=hot, keep_internals=internals)
+            ._jdf.queryExecution().optimizedPlan().toString().count("windowspecdefinition")
+            for internals in (False, True)
+        ]
+        assert counts[0] == counts[1], (enc, counts)
 
 
 def test_read_tick_file_keeps_one_single_partition_exchange(spark, tmp_path):
@@ -227,33 +252,42 @@ def test_dedup_has_no_forced_per_document_broadcasts(spark):
 
 
 def test_fir_averages_is_join_free(spark):
-    """The FIR convolution must stay in scatter form: each tick explodes
-    into its contributing bar ends and ONE groupBy sums — no join of a
-    blown-up taps table back to the tick stream (the gather formulation
-    shuffled 65 M rows twice at sf0.1)."""
-    from tickdatapipeline_spark.functions.fir import design_decimation_filter
-    from tickdatapipeline_spark.operators.bars import _fir_averages
+    """FIR bars read the ticks through ONE scatter aggregate: each tick
+    explodes into its own bar end and the later ends its price reaches,
+    and one groupBy yields OHLC and the convolution sum together — no
+    join of OHLC bars to FIR averages, and no blown-up taps table joined
+    back to the ticks (the gather formulation shuffled 65 M rows twice
+    at sf0.1)."""
+    from tickdatapipeline_spark.config import BarProcessingConfig
+    from tickdatapipeline_spark.operators.bars import bar_aggregate
+    from tickdatapipeline_spark.operators.globalorder import set_pins
 
-    ticks = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .selectExpr("event_id AS tick_idx", "CAST(event_id % 100 + 42000 AS LONG) AS raw_price")
-    )
-    plan = physical(_fir_averages(ticks, [], design_decimation_filter(5), step=5))
+    ticks = spark.read.parquet(f"{SF}/events.parquet").selectExpr(
+        "event_id AS tick_idx", "CAST(event_id % 100 + 42000 AS LONG) AS raw_price",
+        "ts AS timestamp")
+    bp = BarProcessingConfig(enabled=True, ticks_per_bar=5, bar_method="FIR")
+    plan = physical(bar_aggregate(ticks, bp))
     assert "Join" not in plan
-    assert "Generate explode" in plan  # the scatter
-    assert plan.count("HashAggregate") >= 2  # partial (combiner) + final
+    assert plan.count("Generate explode") == 1  # the scatter
+    assert plan.count("HashAggregate") == 2  # partial (combiner) + final
     # windowed (sub-threshold) posture: fused serial scatter, no chunk
     # exchange (measured faster at fixture sizes, r15)
     assert "hashpartitioning(_fc" not in plan
 
     # chunked (at-scale) posture: the explode is spread by an explicit
     # AQE-exempt repartition on the end-chunk id BEFORE the blow-up, so
-    # one giant stream cannot serialize the convolution (r15)
-    plan_c = physical(
-        _fir_averages(ticks, [], design_decimation_filter(5), step=5,
-                      chunked=True))
-    assert "Join" not in plan_c
-    assert "hashpartitioning(_fc" in plan_c and "REPARTITION_BY_NUM" in plan_c
+    # one giant stream cannot serialize the convolution (r15): the
+    # nearest explode above each chunk exchange reads the chunk id
+    set_pins(False)
+    try:
+        lines = physical(bar_aggregate(ticks, bp, chunk_size=1000)).splitlines()
+    finally:
+        set_pins(True)
+    repart = [i for i, ln in enumerate(lines) if "hashpartitioning(_fc" in ln]
+    assert repart and all("REPARTITION_BY_NUM" in lines[i] for i in repart)
+    for i in repart:
+        above = next(ln for ln in reversed(lines[:i]) if "Generate explode" in ln)
+        assert "_fc#" in above.split("explode(", 1)[1].split(", [", 1)[0], above
 
 
 def test_vocab_topk_plans_as_take_ordered(spark):

@@ -265,7 +265,8 @@ def test_runner_priority_failure_replays_batch(spark, tmp_path, feed):
 def test_snapshot_is_fsynced_before_rename(tmp_path, monkeypatch):
     """save_snapshot flushes and fsyncs the temp file before renaming it
     over the snapshot, so an OS crash cannot leave a renamed but empty
-    snapshot."""
+    snapshot, and fsyncs the snapshot's directory after the rename, so
+    an OS crash cannot lose the rename itself."""
     from tickdatapipeline_spark.streaming import persistence
 
     calls = []
@@ -285,10 +286,11 @@ def test_snapshot_is_fsynced_before_rename(tmp_path, monkeypatch):
     path = str(tmp_path / "state.json")
     persistence.save_snapshot(path, batch_id=3, states={"A": StreamState(tick0=7)},
                               bar_states={"A": BarSeed()}, ticks_processed=7)
-    assert [c[0] for c in calls] == ["fsync", "replace"]
-    (_, ino, size), (_, ino2, dst) = calls
+    assert [c[0] for c in calls] == ["fsync", "replace", "fsync"]
+    (_, ino, size), (_, ino2, dst), (_, dir_ino, _) = calls
     assert ino == ino2 == os.stat(path).st_ino and dst == path
     assert size == os.path.getsize(path) > 0
+    assert dir_ino == os.stat(tmp_path).st_ino
     assert persistence.load_snapshot(path)[0] == 3
 
 

@@ -18,10 +18,15 @@ B1-B7 of SURVEY.md §2.5 (/root/reference/src/BarProcessor.jl:134-358):
 - pass-through enrichment: bar columns land only on the completing tick,
   all other ticks keep nulls (:134-161) — a broadcast left join.
 
-Scale: groupBy(bar_id) is an N:1 reduction shuffle on a key derived from
-tick_idx; with stream partitioning it is map-side-combinable and evenly
-distributed by construction (every bar has exactly N rows — no skew).
-The bars table is ~N x smaller than ticks; all bar windows run on it.
+Scale: one grouped pass over the ticks builds every bar. Each tick is
+scattered to the bar ends it reaches (boxcar: its own; FIR: the ~L/N
+ends its price reaches through the L taps) and ONE map-side-combinable
+groupBy(end_tick_idx) yields OHLC, tick count and the FIR sum together —
+no join between OHLC and FIR averages, and evenly distributed by
+construction (every bar has exactly N own rows — no skew). A seed's FIR
+price tail is a driver-computed offset read by a literal map lookup, not
+a table. The bars table is ~N x smaller than ticks; all bar windows run
+on it.
 """
 
 from __future__ import annotations
@@ -72,7 +77,9 @@ class BarSeed:
     sum_high0: int = 0             # cumulative bar-high sum: seed + sum of bar_high_raw
     sum_low0: int = 0              # cumulative bar-low sum: seed + sum of bar_low_raw
     norm0: float = 1.0             # latest recomputed normalization: last bar's bar_normalization
-    tail_prices0: tuple[tuple[int, int], ...] = field(default=())  # (tick_idx, raw_price) of the last L-1 ticks
+    # (tick_idx, raw_price) of the last L-1 ticks; bar_aggregate adds
+    # their convolution terms as an in-plan offset (_fir_tail_offset)
+    tail_prices0: tuple[tuple[int, int], ...] = field(default=())
 
 
 # Q33 fixed-point tap quantization for the FIR convolution. Products
@@ -94,101 +101,35 @@ FIR_Q = 2**33
 _FIR_CHUNK_TAPS = 4
 
 
-def _fir_averages(
-    ticks: DataFrame, part: list[str], taps: tuple[float, ...], step: int,
-    chunked: bool = False,
-) -> DataFrame:
-    """FIR bar averages at bar-end ticks.
+def _fir_tail_offset(seed: "dict | None", stream_id: "str | None", taps_q: np.ndarray,
+                     n: int) -> "Column | None":
+    """The carried price tails' convolution terms as an in-plan offset.
 
-    out(end) = round(sum_i taps[i] * price[end - i]) — the reference's
-    newest-to-oldest circular-buffer convolution (BarProcessor.jl:345-358)
-    with zeros before stream start (absent scatter rows == zero terms).
-
-    Physical shape: SCATTER, not gather — each tick explodes into the
-    ~L/step bar-end positions it contributes to (bar ends sit at
-    multiples of ``step`` in global tick numbering, so a stepped
-    sequence enumerates them directly), then ONE integer-SUM groupBy.
-    No join against the tick stream at all. (The previous gather
-    formulation exploded completions x L and equi-joined 65 M rows back
-    to ticks at sf0.1 — 2 shuffles of the blown-up set.)
-
-    Chunked scatter (``chunked=True``, r15; guide §2.5 input skew /
-    §1.2 order-of-operations): the L/step explode is the expensive
-    stage (~218 replicas/tick at L=1087, step=5) and it inherits the
-    INPUT's partitioning — one giant stream runs it on one core. Each
-    tick is first replicated into the 1-2 end-CHUNKS its window spans
-    (chunk width = _FIR_CHUNK_TAPS x L, so the duplication is <= 1.25x
-    of narrow (tick_idx, price) rows — never the exploded replicas),
-    hash-repartitioned on (stream, chunk) with an explicit
-    AQE-coalesce-exempt partition count, and only then exploded to its
-    in-chunk end positions. Each (part, end) group lives entirely in
-    one chunk, so the map-side combiner still collapses the blow-up to
-    O(ends) rows before the only full shuffle — identical integer sums
-    in any order, bit-identical output.
-
-    ``chunked`` follows the caller's two-pass posture (bar_aggregate
-    passes its own use_chunks), the same size-gated split the tick
-    chain uses: BELOW the two-pass cutover the fused serial scatter
-    wins outright (measured r15 at sf0.1, matched probe_ratio: serial
-    1.94 s vs chunked 2.29 s bench entry — the extra narrow exchange
-    costs more than one core's explode at fixture sizes), ABOVE it the
-    explode is unbounded per partition and must fan out (10x
-    spot-check: multi-task FIR stage, see plans/r15).
-
-    Output may contain ends whose bar never completes (trailing partial);
-    the caller's inner join against completed bars drops them.
+    A BarSeed's tail_prices0 are the last L-1 (tick_idx, raw_price)
+    before the batch; at each later bar end e they still reach, they
+    add sum(raw_price * taps_q[e - tick_idx]) to the Q33 sum. Those
+    terms are computed here on the driver with numpy integer math and
+    read by one literal map lookup on (stream, end), like
+    globalorder.seed_columns reads a seed: no tail table, union or join.
+    Exact: each product is below 2^48 and each sum below 2^59, and
+    integer addition is order-independent, so the offset plus the
+    batch's scatter sum equals one scatter over tail and batch. None
+    when no seed carries a tail.
     """
-    L = len(taps)
-    # one typed literal, not an array of L literal children: the driver
-    # analyses a single node however long the filter is
-    taps_q = F.lit(np.array([round(c * FIR_Q) for c in taps], dtype=np.int64))
-    t = F.col("tick_idx")
-    first_end = F.expr(f"((tick_idx + {step - 1}) DIV {step}) * {step}")
-    last_end = t + F.lit(L - 1)
-    src = ticks
-    if chunked:
-        C = _FIR_CHUNK_TAPS * L
-        # replicate each tick into the end-chunks its [first_end,
-        # last_end] span touches (<= 1 + span/C); guard the ascending-
-        # sequence contract like _expand_rows does (L < step could make
-        # the span empty)
-        chunk_seq = F.when(
-            first_end <= last_end,
-            F.sequence(
-                F.expr(
-                    f"(((tick_idx + {step - 1}) DIV {step}) * {step}) DIV {C}"),
-                F.expr(f"(tick_idx + {L - 1}) DIV {C}"),
-            ),
-        )
-        src = fixed_repartition(
-            ticks.select(*part, "tick_idx", "raw_price", F.explode(chunk_seq).alias("_fc")),
-            part + ["_fc"],
-        )
-        # in-chunk end positions: multiples of `step` within
-        # [max(first_end, chunk start), min(last_end, chunk end)]
-        lo = F.greatest(
-            first_end,
-            F.expr(f"((_fc * {C} + {step - 1}) DIV {step}) * {step}"),
-        )
-        hi = F.least(last_end, F.col("_fc") * F.lit(C) + F.lit(C - 1))
-        ends = F.when(lo <= hi, F.sequence(lo, hi, F.lit(step)))
-    else:
-        ends = F.when(
-            first_end <= last_end, F.sequence(first_end, last_end, F.lit(step))
-        )
-    scattered = src.select(*part, "tick_idx", "raw_price", F.explode(ends).alias("_e"))
-    tap_q = F.element_at(taps_q, (F.col("_e") - t + 1).cast("int"))
-    return (
-        scattered.groupBy(*part, F.col("_e").alias("end_tick_idx"))
-        .agg(F.sum(F.col("raw_price") * tap_q).alias("_fir_q"))
-        .select(
-            *part,
-            "end_tick_idx",
-            F.floor(F.col("_fir_q").cast("double") / F.lit(float(FIR_Q)) + F.lit(0.5))
-            .cast("long")
-            .alias("bar_average_raw"),
-        )
-    )
+    L = len(taps_q)
+    per_stream = []
+    for k, sk in (seed or {}).items():
+        if not sk.tail_prices0:
+            continue
+        t, p = np.array(sk.tail_prices0, dtype=np.int64).T
+        # the ends after the tail (earlier bars are done) it still reaches
+        ends = np.arange((t.max() // n + 1) * n, t.max() + L, n)
+        off = ends[:, None] - t  # >= 1: the tap index of each term
+        terms = np.where(off < L, p * taps_q[np.minimum(off, L - 1)], 0).sum(axis=1)
+        per_stream += [F.lit(k), F.map_from_arrays(F.lit(ends), F.lit(terms))]
+    if not per_stream:
+        return None
+    return F.coalesce(F.create_map(*per_stream)[F.col(stream_id)][F.col("end_tick_idx")], F.lit(0))
 
 
 def bar_aggregate(
@@ -225,6 +166,7 @@ def bar_aggregate(
     part = [stream_id] if stream_id else []
     n = cfg.ticks_per_bar
     use_chunks = chunk_size is not None
+    fir = cfg.bar_method == "FIR"
     sd = seed_columns(seed, stream_id, BarSeed(),
                       [f.name for f in fields(BarSeed) if f.name != "tail_prices0"])
 
@@ -232,55 +174,84 @@ def bar_aggregate(
         """A running quantity's chunk-offset column: chunked plans only."""
         return col if use_chunks else None
 
-    # ---- stage 1: the OHLC aggregate. DIV, not double '/'+cast: exact
+    # ---- stage 1: one scatter, one grouped aggregate (the reference's
+    # per-tick step updates the open bar's OHLC and pushes the price into
+    # the FIR buffer at once, BarProcessor.jl:134-202, :345-358). Each
+    # tick goes to the bar ends it reaches, keyed by end_tick_idx: its
+    # own bar's end and, for FIR, every later multiple of n its price
+    # still reaches through the L taps. DIV, not double '/'+cast: exact
     # for any tick_idx (the double quotient is only floor-exact below 2^53)
-    bar_pos = ((F.col("tick_idx") - 1) % n).cast("long")
-    bars = ticks.groupBy(*part, F.expr(f"(tick_idx - 1) DIV {n}").alias("bar_id")).agg(
-        F.max(F.when(bar_pos == 0, F.col("raw_price"))).alias("bar_open_raw"),
-        F.max("raw_price").alias("bar_high_raw"),
-        F.min("raw_price").alias("bar_low_raw"),
-        F.max(F.when(bar_pos == n - 1, F.col("raw_price"))).alias("bar_close_raw"),
-        F.max(F.when(bar_pos == n - 1, F.col("timestamp"))).alias("bar_end_timestamp"),
-        F.max(F.when(bar_pos == n - 1, F.col("tick_idx"))).alias("end_tick_idx"),
-        F.count(F.lit(1)).alias("_cnt"),
+    t, e = F.col("tick_idx"), F.col("_e")
+    own_end = F.expr(f"((tick_idx + {n - 1}) DIV {n}) * {n}")
+    cols = [*part, "tick_idx", "raw_price", "timestamp"]
+    if fir:
+        taps_q = np.array([round(c * FIR_Q) for c in design_decimation_filter(n)], dtype=np.int64)
+        L = len(taps_q)
+        # the filter is ~50n taps, so a tick's own end is its first end
+        last_end = t + F.lit(L - 1)
+        src = ticks
+        if use_chunks:
+            # chunked scatter: the ~L/n explode inherits the input's
+            # partitioning, so one giant stream would run it on one core.
+            # Each narrow tick row goes first to the 1-2 end-chunks its
+            # span touches, repartitioned on (stream, chunk) with an
+            # explicit, AQE-coalesce-exempt count, then explodes to its
+            # in-chunk ends; each (part, end) group lives in one chunk,
+            # so the map-side combiner still collapses the blow-up.
+            # Below the two-pass cutover the serial scatter is faster.
+            width = _FIR_CHUNK_TAPS * L
+            chunk_seq = F.sequence(*(F.call_function("div", x, F.lit(width)) for x in (own_end, last_end)))
+            src = fixed_repartition(ticks.select(*cols, F.explode(chunk_seq).alias("_fc")),
+                                    part + ["_fc"])
+            lo = F.greatest(own_end, F.expr(f"((_fc * {width} + {n - 1}) DIV {n}) * {n}"))
+            hi = F.least(last_end, F.col("_fc") * F.lit(width) + F.lit(width - 1))
+            ends = F.when(lo <= hi, F.sequence(lo, hi, F.lit(n)))
+        else:
+            ends = F.sequence(own_end, last_end, F.lit(n))
+        scattered = src.select(*cols, F.explode(ends).alias("_e"))
+        # out(end) = round(sum_i taps[i] * price[end - i]): absent rows
+        # are the zeros before stream start, as in the reference's
+        # zero-initialised circular buffer
+        fir_sum = [F.sum(F.col("raw_price") * F.element_at(F.lit(taps_q), (e - t + 1).cast("int")))
+                   .alias("_fir_q")]
+    else:
+        scattered, fir_sum = ticks.select(*cols, own_end.alias("_e")), []
+    own, price = e - t < n, F.col("raw_price")
+    bars = scattered.groupBy(*part, e.alias("end_tick_idx")).agg(
+        F.max(F.when(e - t == n - 1, price)).alias("bar_open_raw"),
+        F.max(F.when(own, price)).alias("bar_high_raw"),
+        F.min(F.when(own, price)).alias("bar_low_raw"),
+        F.max(F.when(e == t, price)).alias("bar_close_raw"),
+        F.max(F.when(e == t, F.col("timestamp"))).alias("bar_end_timestamp"),
+        F.count(F.when(own, t)).alias("_cnt"),
+        *fir_sum,
     )
 
     # merge the carried unfinished OHLC bar into its batch remainder; the
-    # partial trailing bar never completes
-    is_pb = (sd["partial_cnt0"] > 0) & (F.col("bar_id") == sd["bars_done0"])
+    # partial trailing bar never completes, nor does an end only later
+    # ticks' FIR terms reach
+    bar_id = F.expr(f"end_tick_idx DIV {n} - 1")
+    is_pb = (sd["partial_cnt0"] > 0) & (bar_id == sd["bars_done0"])
     high = F.when(is_pb, F.greatest("bar_high_raw", sd["partial_high0"])).otherwise(F.col("bar_high_raw"))
     low = F.when(is_pb, F.least("bar_low_raw", sd["partial_low0"])).otherwise(F.col("bar_low_raw"))
-    # boxcar: Int(round((H+L+C)/3)) (BarProcessor.jl:239-245);
-    # (H+L+C)/3 can never be an exact .5 tie for integers, so the
-    # HALF_UP round is engine-agnostic. FIR joins its averages below.
-    boxcar = [] if cfg.bar_method == "FIR" else [
-        F.round((high + low + F.col("bar_close_raw")) / F.lit(3.0), 0).cast("long").alias("bar_average_raw")]
+    if fir:
+        tail = _fir_tail_offset(seed, stream_id, taps_q, n)
+        fir_q = F.col("_fir_q") if tail is None else F.col("_fir_q") + tail
+        avg = F.floor(fir_q.cast("double") / F.lit(float(FIR_Q)) + F.lit(0.5)).cast("long")
+    else:
+        # boxcar: Int(round((H+L+C)/3)) (BarProcessor.jl:239-245);
+        # (H+L+C)/3 can never be an exact .5 tie for integers, so the
+        # HALF_UP round is engine-agnostic
+        avg = F.round((high + low + F.col("bar_close_raw")) / F.lit(3.0), 0).cast("long")
     bars = bars.where(
         F.when(is_pb, F.col("_cnt") + sd["partial_cnt0"]).otherwise(F.col("_cnt")) == n
     ).select(
-        *part, "bar_id",
+        *part, bar_id.alias("bar_id"),
         F.when(is_pb, sd["partial_open0"]).otherwise(F.col("bar_open_raw")).alias("bar_open_raw"),
         high.alias("bar_high_raw"),
         low.alias("bar_low_raw"),
-        "bar_close_raw", "bar_end_timestamp", "end_tick_idx", *boxcar,
+        "bar_close_raw", "bar_end_timestamp", "end_tick_idx", avg.alias("bar_average_raw"),
     )
-
-    if cfg.bar_method == "FIR":
-        taps = design_decimation_filter(n)
-        fir_src = ticks.select(*part, "tick_idx", "raw_price")
-        tail_rows = [
-            (k, t_idx, price)
-            for k, sk in (seed or {}).items()
-            for t_idx, price in sk.tail_prices0
-        ]
-        if tail_rows:
-            key_t = ticks.schema[stream_id].dataType.simpleString()
-            tail = ticks.sparkSession.createDataFrame(
-                tail_rows, f"{stream_id} {key_t}, tick_idx long, raw_price long"
-            )
-            fir_src = fir_src.unionByName(tail)
-        firs = _fir_averages(fir_src, part, taps, step=n, chunked=use_chunks)
-        bars = bars.join(firs, on=part + ["end_tick_idx"])
 
     if use_chunks:
         bars = add_chunk(bars, "bar_id", max(chunk_size // n, 1))

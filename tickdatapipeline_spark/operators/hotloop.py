@@ -244,12 +244,18 @@ def hot_loop(
     else:
         wb = Window.partitionBy(*part).orderBy("bar_ord")
     wb = wb.rowsBetween(Window.unboundedPreceding, 0)
-    # ---- stage 3: the stats bars' running sums -> cached normalization
+    # ---- stage 3: the stats bars' running sums (the window select's
+    # columns, read by the norm and, with internals, by a continuation
+    # seed: HotLoopSeed) -> cached normalization
+    bars = bars.select(
+        "*",
+        running_sum(F.sum("bmin").over(wb), go("_go_bmin0"), hs["sum_bmin0"]).alias("sum_bmin_upto"),
+        running_sum(F.sum("bmax").over(wb), go("_go_bmax0"), hs["sum_bmax0"]).alias("sum_bmax_upto"),
+    )
     k = (F.col("bar_ord") + 1).cast("double")
-    sum_bmin = running_sum(F.sum("bmin").over(wb), go("_go_bmin0"), hs["sum_bmin0"])
-    sum_bmax = running_sum(F.sum("bmax").over(wb), go("_go_bmax0"), hs["sum_bmax0"])
     norm = F.greatest(
-        sum_bmax.cast("double") / k - sum_bmin.cast("double") / k, F.lit(1.0)
+        F.col("sum_bmax_upto").cast("double") / k - F.col("sum_bmin_upto").cast("double") / k,
+        F.lit(1.0),
     )
     norms = bars.select(
         *part,
@@ -258,9 +264,7 @@ def hot_loop(
         # (TickHotLoopF32.jl:397 Int32(round(65536f0/norm))); reachable
         # e.g. at norm = 131072 where 0.5 must round DOWN to 0.
         F.bround(F.lit(65536.0) / norm, 0).cast("long").alias("inv_q16"),
-        # the running sums a continuation seed reads (HotLoopSeed)
-        *([sum_bmin.alias("sum_bmin_upto"), sum_bmax.alias("sum_bmax_upto")]
-          if keep_internals else []),
+        *(["sum_bmin_upto", "sum_bmax_upto"] if keep_internals else []),
     )
     if use_chunks:
         # tiny relative to ticks; pin so the encoder-stage summary job
@@ -350,18 +354,19 @@ def hot_loop(
                 df, sums={"_go_th0": dp}, mods={"_go_th0": C.Q32_MOD}, keys=part,
             )
             df = df.join(F.broadcast(off2), on=part + [GO_CHUNK], how="left")
-        theta = F.pmod(
+        # the phase window runs once: sig_re and sig_im read its column
+        df = df.select("*", F.pmod(
             running_sum(F.sum(dp).over(wcum), go("_go_th0"), hs["cpm_theta0"]),
             F.lit(C.Q32_MOD),
-        )
-        idx = (theta / F.lit(2**C.CPM_INDEX_SHIFT)).cast("long")  # top 10 bits (:173-176)
+        ).alias("cpm_theta"))
+        idx = (F.col("cpm_theta") / F.lit(2**C.CPM_INDEX_SHIFT)).cast("long")  # top 10 bits (:173-176)
         lre, lim = _lut_trig(idx)
         sig_re = F.when(invoked, lre).otherwise(F.lit(0.0))
         sig_im = F.when(invoked, lim).otherwise(F.lit(0.0))
         # theta is observable under keep_internals so the half-even tie
         # policy can be pinned by a golden (a +-1 in theta is invisible
         # through the 10-bit LUT index).
-        internals = [theta.alias("cpm_theta")]
+        internals = ["cpm_theta"]
     elif enc == "amc":
         # Carrier advances by a constant 2^32/16 per *invocation* (:203-230);
         # closed form: theta = incr * (# invoked rows so far) mod 2^32.
@@ -370,7 +375,10 @@ def hot_loop(
                 df, sums={"_go_n0": F.when(invoked, 1).otherwise(0)}, keys=part,
             )
             df = df.join(F.broadcast(off2), on=part + [GO_CHUNK], how="left")
-        amc_n = running_sum(F.count(F.when(invoked, 1)).over(wcum), go("_go_n0"), hs["amc_n0"])
+        # the invocation-count window runs once: sig_re and sig_im read its column
+        df = df.select("*", running_sum(
+            F.count(F.when(invoked, 1)).over(wcum), go("_go_n0"), hs["amc_n0"]).alias("_amc_n"))
+        amc_n = F.col("_amc_n")
         # reduce mod 16 before the multiply: INCR*16 == 2^32 exactly, so
         # theta depends only on amc_n mod 16 — and amc_n * INCR would
         # overflow int64 past 2^35 rows

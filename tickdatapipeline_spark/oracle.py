@@ -199,8 +199,9 @@ def bars_ctes(sp: SignalProcessingConfig, bp: BarProcessingConfig) -> str:
 
     if bp.bar_method == "FIR":
         # Q33 fixed-point convolution at completion ticks only — mirrors
-        # operators/bars.py::_fir_averages (integer SUM: order-independent,
-        # bit-identical across engines).
+        # the FIR sum of operators/bars.py::bar_aggregate's scatter
+        # aggregate (integer SUM: order-independent, bit-identical across
+        # engines).
         from tickdatapipeline_spark.operators.bars import FIR_Q
 
         taps = design_decimation_filter(n)

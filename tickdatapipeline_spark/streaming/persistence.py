@@ -52,8 +52,11 @@ def _decode_bars(d: dict):
 def save_snapshot(path: str, *, batch_id: int, states: dict, bar_states: dict,
                   ticks_processed: int) -> None:
     """Atomic, durable post-batch snapshot: write a temp file, fsync
-    it, rename it over. Without the fsync an OS crash can leave the
-    rename on disk ahead of the data, i.e. an empty snapshot."""
+    it, rename it over, fsync the directory. Without the first fsync an
+    OS crash can leave the rename on disk ahead of the data, i.e. an
+    empty snapshot; without the second it can lose the rename, and the
+    runner would resume from the previous batch's state after Spark has
+    committed this batch."""
     doc = {
         "batch_id": batch_id,
         "ticks_processed": ticks_processed,
@@ -66,6 +69,11 @@ def save_snapshot(path: str, *, batch_id: int, states: dict, bar_states: dict,
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
+    dir_fd = os.open(os.path.dirname(os.path.abspath(path)), os.O_RDONLY)
+    try:
+        os.fsync(dir_fd)
+    finally:
+        os.close(dir_fd)
 
 
 def load_snapshot(path: str):
