@@ -40,7 +40,7 @@ def main() -> None:
     for n in sizes:
         d = TMP / f"events_{n}"
         if not (d / "events.parquet").exists():
-            spark.range(1, n + 1).select(
+            spark.range(0, n).select(
                 F.col("id").alias("event_id"),
                 F.lit(0).cast("long").alias("ts"),
             ).write.mode("overwrite").parquet(str(d / "events.parquet"))

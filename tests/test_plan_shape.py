@@ -179,6 +179,46 @@ def test_hot_loop_plans_each_window_function_once(spark):
         assert counts[0] == counts[1], (enc, counts)
 
 
+def _leaves(df) -> list[str]:
+    """Node names of the leaves of a frame's initial physical plan."""
+    stack, leaves = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.initialPlan()
+        ch = node.children()
+        stack += [ch.apply(i) for i in range(ch.length())]
+        if not ch.length():
+            leaves.append(node.nodeName())
+    return leaves
+
+
+def test_hot_loop_reads_its_input_once(spark, tmp_path):
+    """The stats bars are windows over the tick frame, not an aggregate
+    joined back onto it: the seeded keyed hot loop and the day-file
+    chain (read_tick_file -> expand_volume -> hot_loop) plan no join and
+    one scan, and the enriched day-file frame (ticks joined to their
+    bars) scans the file twice, once per side of its one join."""
+    from tickdatapipeline_spark.config import BarProcessingConfig, SignalProcessingConfig
+    from tickdatapipeline_spark.operators.bars import bar_aggregate, enrich_ticks_with_bars
+    from tickdatapipeline_spark.operators.expansion import expand_volume
+    from tickdatapipeline_spark.operators.hotloop import hot_loop
+    from tickdatapipeline_spark.sources.tickfile import read_tick_file
+
+    raw, cfg, hot, _ = _seeded_keyed_input(spark)
+    path = tmp_path / "t.txt"
+    path.write_text("".join(f"20250319 12000{i} 0000000;41969;41971;{41970 + i};{i % 3}\n"
+                            for i in range(6)))
+    day = hot_loop(expand_volume(read_tick_file(spark, str(path))), SignalProcessingConfig())
+    for name, df in {"seeded keyed": hot_loop(expand_volume(raw, "stream"), cfg,
+                                              stream_id="stream", seed=hot),
+                     "day file": day}.items():
+        assert "Join" not in physical(df), name
+        assert len(_leaves(df)) == 1, (name, _leaves(df))
+    bp = BarProcessingConfig(enabled=True, ticks_per_bar=4, bar_method="FIR")
+    assert physical(enrich_ticks_with_bars(day, bar_aggregate(day, bp))).count("FileScan") == 2
+
+
 def test_read_tick_file_keeps_one_single_partition_exchange(spark, tmp_path):
     """read_tick_file, the day_file source, numbers lines in one global
     order: exactly one exchange, a SinglePartition one."""

@@ -2,8 +2,8 @@
 
 Re-expresses /root/reference/src/TickHotLoopF32.jl:287-437 (validate ->
 hold-last -> jump guard -> winsorize -> 144-tick bar stats -> rolling Q16
-normalization -> encoder) with window functions, one tiny per-bar
-aggregate, and a broadcast join — no per-row state, no UDFs.
+normalization -> encoder) with window functions over the ticks — no
+join, no per-row state, no UDFs.
 
 Row taxonomy (derived from the reference's early returns):
 - ``zero``       invalid price, no prior valid tick (:321-325): signal
@@ -26,8 +26,15 @@ IEEE double instead of Float32 so the Spark plan and the DuckDB oracle
 match bit-for-bit; the reserved EMA/AGC state (:361-375) never affects
 output and is exposed separately (see ``ema_columns``).
 
-Scale: `stream_id` partitions every window. Per stream the only shuffle
-is the per-bar groupBy (144x reduction) whose result is broadcast back.
+Stats bars live in the tick frame, as in the reference's per-tick
+update: a window over each bar's ticks gives its min/max on the tick
+that completes it, and the norm reads running sums of those per-tick
+values, so the plan reads its input once.
+
+Scale: `stream_id` partitions every window, so per stream the plan
+needs one exchange. The chunked plan (``chunk_size``) partitions by
+(stream, chunk) instead; its stats-bar window, keyed by (stream, bar),
+adds a full exchange there.
 """
 
 from __future__ import annotations
@@ -144,18 +151,16 @@ def hot_loop(
     hs = seed_columns(seed, stream_id, HotLoopSeed(), [f.name for f in fields(HotLoopSeed)])
     is_valid = F.col("raw_price").between(cfg.min_price, cfg.max_price)
     df = expanded
-    if use_chunks:
-        # shared by the offsets subplans, the bar aggregate and the main
-        # plan — pin once so the single job computes the lineage once
+    if use_chunks and "_go_v0" not in df.columns:
+        # not fused upstream (see expand_volume valid_price_range): build
+        # the per-chunk valid-count offsets from the expanded rows — one
+        # extra full-data groupBy pass + broadcast join; pin the rows so
+        # the offsets and the main plan run their lineage once
         df = pin(df)
-        if "_go_v0" not in df.columns:
-            # not fused upstream (see expand_volume valid_price_range):
-            # build the per-chunk valid-count offsets from the expanded
-            # rows — one extra full-data groupBy pass + broadcast join
-            valid_offsets = chunk_offsets_plan(
-                df, sums={"_go_v0": F.when(is_valid, 1).otherwise(0)}, keys=part,
-            )
-            df = df.join(F.broadcast(valid_offsets), on=part + [GO_CHUNK], how="left")
+        valid_offsets = chunk_offsets_plan(
+            df, sums={"_go_v0": F.when(is_valid, 1).otherwise(0)}, keys=part,
+        )
+        df = df.join(F.broadcast(valid_offsets), on=part + [GO_CHUNK], how="left")
 
     # ---- stage 1: the valid-count window, then the row-local columns it
     # fixes. Spark evaluates a window function once per occurrence in a
@@ -174,7 +179,7 @@ def hot_loop(
     eff = min(cfg.max_jump, cfg.winsorize_delta_threshold)
     delta_w = F.when(
         is_core, F.greatest(F.least(F.col("price_delta"), F.lit(eff)), F.lit(-eff)),
-    )
+    ).cast("long")
 
     # Bar position over core (accepted) ticks only (:377-381). Row-local,
     # NO second serial window pass: every valid row is core except the
@@ -189,96 +194,73 @@ def hot_loop(
     ).otherwise(F.lit(0))
     core_seq = n_valid_upto - hs["n_valid0"] - first_corr + hs["core_seq0"]
     n = stats_ticks_per_bar
+    bar_ord = F.when(is_core, F.call_function("div", core_seq - 1, F.lit(n)))
+    # the carried unfinished stats bar: the one that began before this
+    # batch's first core tick (least/greatest skip its NULL min/max)
+    is_pb = (hs["partial_cnt0"] > 0) & (bar_ord * n < hs["core_seq0"])
+    # a stats bar's n-th core tick completes it and recomputes the cached
+    # normalization (:383-405)
+    completes = is_core & (core_seq % n == 0)
+    bar = Window.partitionBy(*part, bar_ord)
+
+    # ---- stage 2: the row-local bar columns and, on a bar's completing
+    # tick, the bar's min/max of winsorized deltas (its ticks in this
+    # batch, merged with the carried part); 0 on every other row, so a
+    # running sum over the ticks sums the completed bars. The windowed
+    # plan's partitioning by stream already clusters (stream, bar_ord),
+    # so the bar window adds a sort but no exchange; the chunked plan's
+    # (stream, chunk) partitioning does not.
     df = df.select(
         "*",
         is_core.alias("is_core"),
-        delta_w.cast("long").alias("delta_w"),
+        delta_w.alias("delta_w"),
         core_seq.alias("core_seq"),
         F.when(is_core, F.call_function("div", core_seq, F.lit(n))).alias("bars_done"),
-        F.when(is_core, F.call_function("div", core_seq - 1, F.lit(n))).alias("bar_ord"),
+        bar_ord.alias("bar_ord"),
+        F.when(completes, F.least(F.min(delta_w).over(bar), F.when(is_pb, hs["partial_min0"])))
+        .otherwise(F.lit(0)).alias("_bmin"),
+        F.when(completes, F.greatest(F.max(delta_w).over(bar), F.when(is_pb, hs["partial_max0"])))
+        .otherwise(F.lit(0)).alias("_bmax"),
     )
     is_hold = (~F.col("is_valid")) & (F.col("n_valid_upto") >= 1)
     is_zero = (~F.col("is_valid")) & (F.col("n_valid_upto") == 0)
     clipped = F.col("is_core") & (F.abs(F.col("price_delta")) > eff)
 
-    # NOTE (r14, measured): the bars aggregate below re-executes the
-    # serial window lineage as a broadcast subquery (no exchange to
-    # reuse — the single-file scan is already single-partition). A
-    # DISK_ONLY pin here to share the lineage was measured SLOWER than
-    # the recompute at sub-threshold sizes (alternating A/B: trio total
-    # 10.8 -> 11.4 s): the eager checkpoint write+read of the wide
-    # post-window frame costs more than re-running the windows. The
-    # windowed path only ever runs below the two-pass cutover, so the
-    # duplicated lineage is bounded; the chunked path pins because its
-    # offsets subqueries multiply consumers.
-    # ---- stage 2: per-bar min/max of winsorized deltas; only FULL bars
-    # trigger a normalization recompute (:383-405). The groupBy is a 144x
-    # reduction; the result is tiny -> broadcast back to the tick stream.
-    bars = df.where(F.col("is_core")).groupBy(*part, "bar_ord").agg(
-        F.min("delta_w").alias("bmin"),
-        F.max("delta_w").alias("bmax"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    # merge the carried unfinished stats bar (the one that began before
-    # this batch's first core tick) into its batch remainder;
-    # least/greatest skip NULL partial min/max for streams with no carry
-    is_pb = (hs["partial_cnt0"] > 0) & (F.col("bar_ord") * n < hs["core_seq0"])
-    cnt = F.when(is_pb, F.col("cnt") + hs["partial_cnt0"]).otherwise(F.col("cnt"))
-    bars = bars.where(cnt == n).select(
-        *part, "bar_ord",
-        F.when(is_pb, F.least("bmin", hs["partial_min0"])).otherwise(F.col("bmin")).alias("bmin"),
-        F.when(is_pb, F.greatest("bmax", hs["partial_max0"])).otherwise(F.col("bmax")).alias("bmax"),
-    )
     if use_chunks:
-        # same two-pass shape one level up the hierarchy: the bar frame
-        # is rows/144 but still unbounded for a single 100 TB stream
-        bars_chunk = max(chunk_size // n, 1)
-        bars = pin(add_chunk(bars, "bar_ord", bars_chunk))
+        # the bar sums' chunk offsets read the frame the main plan reads
+        # too — pin it so the bar window's exchange runs once
+        df = pin(df)
         bar_offs = chunk_offsets_plan(
-            bars,
-            sums={"_go_bmin0": F.col("bmin"), "_go_bmax0": F.col("bmax")},
-            keys=part,
+            df, sums={"_go_bmin0": F.col("_bmin"), "_go_bmax0": F.col("_bmax")}, keys=part,
         )
-        bars = bars.join(F.broadcast(bar_offs), on=part + [GO_CHUNK], how="left")
-        wb = Window.partitionBy(*part, GO_CHUNK).orderBy("bar_ord")
-    else:
-        wb = Window.partitionBy(*part).orderBy("bar_ord")
-    wb = wb.rowsBetween(Window.unboundedPreceding, 0)
-    # ---- stage 3: the stats bars' running sums (the window select's
-    # columns, read by the norm and, with internals, by a continuation
-    # seed: HotLoopSeed) -> cached normalization
-    bars = bars.select(
+        df = df.join(F.broadcast(bar_offs), on=part + [GO_CHUNK], how="left")
+    # ---- stage 3: the completed stats bars' running sums (the window
+    # select's columns, read by the norm and, with internals, by a
+    # continuation seed: HotLoopSeed), NULL until a bar completes in this
+    # batch — the seed's inv_q16_0 applies until then
+    done_here = F.col("bars_done") > F.call_function("div", hs["core_seq0"], F.lit(n))
+    df = df.select(
         "*",
-        running_sum(F.sum("bmin").over(wb), go("_go_bmin0"), hs["sum_bmin0"]).alias("sum_bmin_upto"),
-        running_sum(F.sum("bmax").over(wb), go("_go_bmax0"), hs["sum_bmax0"]).alias("sum_bmax_upto"),
+        F.when(done_here, running_sum(F.sum("_bmin").over(wcum), go("_go_bmin0"), hs["sum_bmin0"]))
+        .alias("sum_bmin_upto"),
+        F.when(done_here, running_sum(F.sum("_bmax").over(wcum), go("_go_bmax0"), hs["sum_bmax0"]))
+        .alias("sum_bmax_upto"),
     )
-    k = (F.col("bar_ord") + 1).cast("double")
+    k = F.col("bars_done").cast("double")
     norm = F.greatest(
         F.col("sum_bmax_upto").cast("double") / k - F.col("sum_bmin_upto").cast("double") / k,
         F.lit(1.0),
     )
-    norms = bars.select(
-        *part,
-        (F.col("bar_ord") + 1).alias("bars_done"),
-        # bround = half-even, matching Julia round() at exact .5 ties
-        # (TickHotLoopF32.jl:397 Int32(round(65536f0/norm))); reachable
-        # e.g. at norm = 131072 where 0.5 must round DOWN to 0.
-        F.bround(F.lit(65536.0) / norm, 0).cast("long").alias("inv_q16"),
-        *(["sum_bmin_upto", "sum_bmax_upto"] if keep_internals else []),
-    )
-    if use_chunks:
-        # tiny relative to ticks; pin so the encoder-stage summary job
-        # and the final plan don't both recompute the bar aggregation
-        norms = pin(norms)
-
-    # ---- stage 4: the norms join, then one select: normalize, flag, encode
-    # NO broadcast hint: norms is rows/144 — tiny locally (AQE broadcasts
-    # it automatically) but far too large to broadcast at 100 TB, where
-    # this becomes a stream-co-partitioned shuffle join.
-    df = df.join(norms, on=part + ["bars_done"], how="left")
+    # bround = half-even, matching Julia round() at exact .5 ties
+    # (TickHotLoopF32.jl:397 Int32(round(65536f0/norm))); reachable e.g.
+    # at norm = 131072 where 0.5 must round DOWN to 0. greatest skips
+    # NULLs (NULL sums would read as norm 1), hence the done_here test.
     inv = F.when(
-        F.col("is_core"), F.coalesce(F.col("inv_q16"), hs["inv_q16_0"])
+        F.col("is_core"),
+        F.coalesce(F.when(done_here, F.bround(F.lit(65536.0) / norm, 0).cast("long")),
+                   hs["inv_q16_0"]),
     )
+    # ---- stage 4: one select: normalize, flag, encode
     # Q16 fixed-point normalize (:407-414) — exact in double.
     nq16 = F.col("delta_w") * inv
     ratio = F.when(F.col("is_core"), nq16.cast("double") * F.lit(C.Q16_INV)).otherwise(F.lit(0.0))
@@ -303,12 +285,8 @@ def hot_loop(
     invoked = ~is_zero  # encoders run on every row except `zero` rows
     if use_chunks and enc != "hexad16":
         # the encoder prefix needs one more chunk summary over the
-        # post-join frame — pin it so summary + final plan share work.
-        # (r14: removing this pin measured a wash locally — derivative
-        # 6.57 vs 6.58, multistream 7.32 vs 6.72, within box noise —
-        # but it inlines the norms-join segment into the carry-offsets
-        # subquery, tripling the full-data exchange nodes the plan-shape
-        # test pins; kept for the bounded verified shape.)
+        # normalized frame — pin it so summary + final plan share the
+        # stage-3 window and its exchange
         df = pin(df)
     internals = []
     if enc == "derivative":
@@ -409,8 +387,8 @@ def hot_loop(
                      inv.alias("inv_q16"), nq16.alias("nq16"), ratio.alias("ratio"),
                      "n_valid_upto", "sum_bmin_upto", "sum_bmax_upto",
                      # delta_w merged with the carried stats bar: the
-                     # row-level twin of the bars' is_pb merge
-                     F.when(is_pb, F.least("delta_w", hs["partial_min0"])).otherwise(F.col("delta_w")).alias("bar_dmin"),
-                     F.when(is_pb, F.greatest("delta_w", hs["partial_max0"])).otherwise(F.col("delta_w")).alias("bar_dmax"),
+                     # row-level twin of the completing tick's merge
+                     F.least("delta_w", F.when(is_pb, hs["partial_min0"])).alias("bar_dmin"),
+                     F.greatest("delta_w", F.when(is_pb, hs["partial_max0"])).alias("bar_dmax"),
                      *internals]
     return df.select(*out_cols)

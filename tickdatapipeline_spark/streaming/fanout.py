@@ -119,9 +119,8 @@ class TripleSplitManager:
         accepted = min(n_rows, space)
         dropped = n_rows - accepted
         if accepted > 0:
-            head = df.orderBy(F.col("tick_idx"))
-            if accepted < n_rows:
-                head = head.limit(accepted)
+            # always a limit: an ordered take plans fewer jobs than a sort
+            head = df.orderBy(F.col("tick_idx")).limit(accepted)
             c._pending.append((head.collect(), df.schema))
             c.fill += accepted
         c.stats.messages_sent += accepted

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tickdatapipeline_spark import constants as C
@@ -112,8 +112,8 @@ def advance_bars_streams(
     (reference src/BarProcessor.jl:41-68) without a per-stream driver
     loop. Tick ids are dense per stream, so a stream's last tick fixes
     its bar count and its trailing partial bar (see BarSeed). One action
-    collects O(streams) rows: a grouped aggregate of the batch ticks
-    joined to one of the bars and, for FIR, to the price tail.
+    collects O(streams) rows: a grouped aggregate of the batch ticks (for
+    FIR also their price tail) joined to one of the bars.
     """
     from tickdatapipeline_spark.functions.fir import design_decimation_filter
     from tickdatapipeline_spark.operators.bars import BarSeed, bar_aggregate
@@ -122,12 +122,18 @@ def advance_bars_streams(
     keep = len(design_decimation_filter(n)) - 1 if bp.bar_method == "FIR" else 0
     bars = bar_aggregate(ticks_batch, bp, stream_id=stream_id, seed=seeds).cache()
     bar_id = F.expr(f"(tick_idx - 1) DIV {n}")
+    # FIR: the last L-1 prices the next convolutions can reach; slice's
+    # start is clamped, since a start before the array's first element
+    # gives an empty array and a batch often holds fewer than L-1 ticks
+    prices = F.sort_array(F.collect_list(F.struct("tick_idx", "raw_price")))
+    tail = F.slice(prices, F.greatest(F.size(prices) - keep + 1, F.lit(1)), keep)
     summary = ticks_batch.groupBy(stream_id).agg(
         F.max("tick_idx").alias("max_tick"),
         # the trailing bar's open, high and low
         _on_last(bar_id, F.col("raw_price"), (-F.col("tick_idx")).alias("t")).alias("open"),
         _on_last(bar_id, F.col("raw_price")).alias("high"),
         (-_on_last(bar_id, -F.col("raw_price"))).alias("low"),
+        *([tail.alias("tail")] if keep else []),
     ).join(
         bars.groupBy(stream_id).agg(
             F.sum("bar_high_raw").alias("add_high"),
@@ -137,14 +143,6 @@ def advance_bars_streams(
         ),
         stream_id, "left",
     )
-    if keep:  # FIR: the last L-1 prices the next convolutions can reach
-        w = Window.partitionBy(stream_id).orderBy(F.col("tick_idx").desc())
-        summary = summary.join(
-            ticks_batch.select("*", F.row_number().over(w).alias("_rn")).where(F.col("_rn") <= keep)
-            .groupBy(stream_id)
-            .agg(F.sort_array(F.collect_list(F.struct("tick_idx", "raw_price"))).alias("tail")),
-            stream_id,
-        )
 
     next_seeds = dict(seeds)  # a stream absent from the batch keeps its seed
     # the one action: it also materializes the bars cache
